@@ -44,12 +44,12 @@ DELTA_SESSION_CONFS: dict[str, str] = {
     "spark.sql.catalog.spark_catalog": (
         "org.apache.spark.sql.delta.catalog.DeltaCatalog"
     ),
-    # read_changes_delta / _maintain_latest_delta consume the change data
-    # feed, which Delta only records when the table property is set —
-    # default it on for every table this session creates so CDF reads
-    # never hit "table does not have change data feed enabled". The
-    # writers below ALSO set the property per-table (belt and braces for
-    # sessions built without these confs).
+    # read_changes_delta and the pipeline's Delta latest-zone step consume
+    # the change data feed, which Delta only records when the table
+    # property is set — default it on for every table this session
+    # creates so CDF reads never hit "table does not have change data
+    # feed enabled". The writers below ALSO set the property per-table
+    # (belt and braces for sessions built without these confs).
     "spark.databricks.delta.properties.defaults.enableChangeDataFeed": (
         "true"
     ),

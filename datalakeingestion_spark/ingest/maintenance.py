@@ -16,12 +16,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, p.getFileSystem(conf), p
+from .merge import _fs
+from .watermark import committed_files, files_payload
 
 
 def count_data_files(spark: SparkSession, path: str) -> int:
@@ -111,8 +107,6 @@ def compact(
     if log is not None:
         if ingestion_id is None:
             raise ValueError("re-baselining needs ingestion_id with log")
-        import json
-
         from .pipeline import _list_files
         from .timetravel import history
 
@@ -134,7 +128,7 @@ def compact(
                 start_value=span["lo"],
                 end_value=span["hi"],
                 source_count=n_before,
-                files_json=json.dumps(files),
+                files_json=files_payload(files),
             )
     return n_before
 
@@ -167,11 +161,8 @@ def vacuum(
     Delta's "don't vacuum below the max transaction duration".
     ``now_ms`` is injectable for tests. Returns the deleted paths.
     """
-    import json as _json
     import re as _re
     import time as _time
-
-    from pyspark.sql import functions as F  # noqa: F811
 
     from .delta_sink import is_delta_table, vacuum_delta
 
@@ -191,17 +182,12 @@ def vacuum(
     rows = (
         log.read()
         .filter(F.col("lake_ingestion_id") == ingestion_id)
-        .filter(F.col("reason_code").startswith("["))
         .select("reason_code")
         .collect()
     )
     for row in rows:
-        try:
-            files = _json.loads(row["reason_code"])
-        except ValueError:
-            continue
-        if isinstance(files, list):
-            referenced.update(norm(str(f)) for f in files)
+        files = committed_files(row["reason_code"]) or ()
+        referenced.update(norm(f) for f in files)
 
     cutoff = (now_ms if now_ms is not None else _time.time() * 1000) - (
         retention_seconds * 1000

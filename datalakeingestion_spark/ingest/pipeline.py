@@ -19,6 +19,25 @@ Spark-first design:
   file-list rollback is the dependency-free stand-in with the same
   semantics.
 
+One orchestration (:meth:`IncrementalIngestJob.run`) drives both lake
+sinks — watermark, STARTED row, bounds, the two-scan cap, LOADED row,
+validation, SUCCESS/VALIDATION_FAILURE row, latest zone. Only these steps
+differ between ``sink_format="parquet"`` (:class:`_ParquetSink`) and
+``sink_format="delta"`` (:class:`_DeltaSink`):
+
+===================  ===============================  ==============================
+step                 parquet                          delta
+===================  ===============================  ==============================
+STARTED payload      the run's staging dir            "delta-sink"
+write, then publish  stage, list; LOADED = the file   record pre, append; LOADED =
+                     list; move files, drop staging   {"delta_commit": post}; no-op
+validation read      spark.read.parquet               delta_sink.read_delta
+rollback (reason)    delete the listed files          RESTORE pre, or drop the new
+                     (count-mismatch-rolled-back)     table (count-mismatch-restored)
+orphan recovery      delete listed files + staging    RESTORE/drop the orphaned commit
+latest batch, merge  written files, merge_latest      change feed, merge_latest_delta
+===================  ===============================  ==============================
+
 Quirks preserved for parity (SURVEY.md §4):
 - coalesce watermark uses min(max(a), max(b)) as the conservative
   end_value (ingest_mysql_data.py:281-282);
@@ -29,7 +48,6 @@ Quirks preserved for parity (SURVEY.md §4):
 
 from __future__ import annotations
 
-import json
 import uuid
 from dataclasses import dataclass, field
 
@@ -38,6 +56,8 @@ from pyspark.sql import functions as F
 
 from ..config.partition_spec import PartitionSpec
 from ..operators.relational import coalesce_range_filter
+from . import delta_sink as dsink
+from .merge import _fs
 from .schema_registry import SchemaRegistry
 from .watermark import (
     STATUS_FAILED,
@@ -47,10 +67,21 @@ from .watermark import (
     STATUS_SUCCESS,
     STATUS_VALIDATION_FAILURE,
     ExecutionLog,
+    committed_delta_version,
+    committed_files,
+    delta_commit_payload,
+    files_payload,
     resolve_watermark,
 )
 
-_TS_FMT = "yyyy-MM-dd HH:mm:ss"
+# a batch is closed by one of these statuses, or by a FAILED row carrying
+# an orphan-recovery marker, logged at-or-after its STARTED row
+_CLOSED = {STATUS_SUCCESS, STATUS_VALIDATION_FAILURE, STATUS_NO_DATA}
+_ORPHAN_MARKERS = {
+    "orphaned-staging-cleaned",
+    "orphaned-batch-cleaned",
+    "orphaned-delta-commit-restored",
+}
 
 
 @dataclass
@@ -66,10 +97,7 @@ class IngestResult:
 def _list_files(spark: SparkSession, path: str) -> set[str]:
     """Recursive data-file listing via the Hadoop FS API (works for any
     supported scheme: file://, hdfs://, s3a://...)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = fs_path.getFileSystem(conf)
+    _, fs, fs_path = _fs(spark, path)
     if not fs.exists(fs_path):
         return set()
     files: set[str] = set()
@@ -83,29 +111,22 @@ def _list_files(spark: SparkSession, path: str) -> set[str]:
 
 
 def _delete_files(spark: SparkSession, files: set[str]) -> None:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     for f in files:
-        p = jvm.org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(conf).delete(p, False)
+        _, fs, p = _fs(spark, f)
+        fs.delete(p, False)
 
 
 def _delete_dir(spark: SparkSession, path: str) -> None:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(conf).delete(p, True)
+    _, fs, p = _fs(spark, path)
+    fs.delete(p, True)
 
 
 def _move_files(spark: SparkSession, moves: list[tuple[str, str]]) -> None:
     """Per-file rename (same filesystem). Parent dirs are created; an
     already-present destination means a retry already moved it — skip."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
     for src, dst in moves:
-        sp = jvm.org.apache.hadoop.fs.Path(src)
+        jvm, fs, sp = _fs(spark, src)
         dp = jvm.org.apache.hadoop.fs.Path(dst)
-        fs = sp.getFileSystem(conf)
         if fs.exists(dp):
             continue
         fs.mkdirs(dp.getParent())
@@ -131,6 +152,156 @@ def read_lake(spark: SparkSession, target_location: str) -> DataFrame:
     never silently wrong.
     """
     return spark.read.option("mergeSchema", "true").parquet(target_location)
+
+
+class _ParquetSink:
+    """Staged commit on plain parquet. The batch is written to a
+    run-private, dot-prefixed staging dir (recorded in the STARTED row),
+    its final destinations are recorded in the LOADED row, and only THEN
+    do the files move into place — so every crash point is recoverable
+    from the log (see :meth:`recover`)."""
+
+    def __init__(self, job: IncrementalIngestJob):
+        self.job = job
+        self.spark = job.spark
+        self.staging = job._staging_dir(uuid.uuid4().hex)
+        self.started_payload = self.staging
+        self.moves: list[tuple[str, str]] = []
+        self.files: list[str] = []
+
+    def write(self, delta: DataFrame, partition_col: str | None) -> str:
+        writer = delta.write.mode("append").option("compression", "snappy")
+        if partition_col is not None:
+            writer = writer.partitionBy(partition_col)
+        writer.parquet(self.staging)
+        target = self.job.target_location.rstrip("/")
+        # listed paths are fully-qualified URIs (file:/..., s3a://...);
+        # splice the destination around the staging path inside them
+        for f in sorted(_list_files(self.spark, self.staging)):
+            i = f.find(self.staging)
+            if i < 0:  # pragma: no cover - FS returned an unrelated path
+                raise RuntimeError(f"staged file {f} outside {self.staging}")
+            self.moves.append((f, f[:i] + target + f[i + len(self.staging):]))
+        self.files = sorted(dst for _, dst in self.moves)
+        return files_payload(self.files)
+
+    def publish(self) -> None:
+        _move_files(self.spark, self.moves)
+        _delete_dir(self.spark, self.staging)
+
+    def read(self) -> DataFrame:
+        return self.spark.read.parquet(self.job.target_location)
+
+    def rollback(self) -> str:
+        _delete_files(self.spark, set(self.files))
+        return "count-mismatch-rolled-back"
+
+    def latest_batch(self):
+        """The batch as the lake recorded it: the written data files.
+        Partition columns live in directory names, not the files, so the
+        read matches the pre-partition schema merge_latest expects."""
+        from .merge import merge_latest
+
+        return self.spark.read.parquet(*self.files), merge_latest
+
+    def recover(self, started, loaded) -> str | None:
+        """Crash recovery for an open staged batch (reference T5 analog):
+
+        - died before the LOADED row (maybe mid-staging-write): delete the
+          staging dir (never visible to readers — it is dot-prefixed);
+        - died during/after the move (a LOADED row exists): delete the
+          listed final files (the moved ones) AND the staging dir (the
+          unmoved ones). Without this, the re-pulled range would
+          out-count the source and validation would fail on every retry.
+
+        Returns the marker to log, or None when there was nothing to do."""
+        staging = started["reason_code"] or ""
+        ours = staging.startswith(self.job._staging_dir(""))
+        if loaded is None:
+            if not ours:
+                return None
+            _delete_dir(self.spark, staging)
+            return "orphaned-staging-cleaned"
+        files = committed_files(loaded["reason_code"])
+        if files:
+            _delete_files(self.spark, set(files))
+        if ours:
+            _delete_dir(self.spark, staging)
+        return "orphaned-batch-cleaned"
+
+
+class _DeltaSink:
+    """Delta Lake's transaction log as the commit: ``append_delta`` is
+    atomic (a crash mid-write leaves NO visible commit), so there is no
+    staging dir and nothing to publish; the LOADED row records the commit
+    VERSION. All Delta IO goes through ``ingest.delta_sink`` attributes
+    looked up at call time, so tests/test_delta_sink.py can drive the
+    orchestration against a parquet-backed fake of that seam."""
+
+    started_payload = "delta-sink"
+
+    def __init__(self, job: IncrementalIngestJob):
+        self.job = job
+        self.spark = job.spark
+        self.target = job.target_location.rstrip("/")
+        self.files: list[str] = []  # Delta tracks data files itself
+        self.pre: int | None = None
+        self.post: int | None = None
+
+    def write(self, delta: DataFrame, partition_col: str | None) -> str:
+        self.pre = dsink.table_version(self.spark, self.target)  # None: new
+        dsink.append_delta(delta, self.target, partition_col)
+        self.post = dsink.table_version(self.spark, self.target)
+        return delta_commit_payload(self.post)
+
+    def publish(self) -> None:
+        """The append already committed atomically."""
+
+    def read(self) -> DataFrame:
+        return dsink.read_delta(self.spark, self.target)
+
+    def rollback(self) -> str:
+        if self.pre is None:
+            _delete_dir(self.spark, self.target)  # batch created the table
+        else:
+            dsink.restore_version(self.spark, self.target, self.pre)
+        return "count-mismatch-restored"
+
+    def latest_batch(self):
+        """The commit re-read from the table's change feed."""
+        batch = dsink.read_changes_delta(
+            self.spark, self.target, self.post - 1
+        ).drop("_change_type", "_commit_version", "_commit_timestamp")
+        return batch, dsink.merge_latest_delta
+
+    def recover(self, started, loaded) -> str | None:
+        """The T5 window an atomic sink leaves open: a crash AFTER the
+        append commit but BEFORE the SUCCESS row. The watermark still
+        points before the batch, so a retry would append the same range
+        AGAIN. If the table is still at exactly the orphaned version,
+        RESTORE the version before it (or drop the table when the orphan
+        was its first commit). If the table moved past it, someone else
+        committed on top — restoring would destroy their data, so fail
+        loudly for manual repair (single writer per target is the
+        supported deployment, as for the parquet sink)."""
+        commit = None if loaded is None else committed_delta_version(
+            loaded["reason_code"]
+        )
+        if commit is None:
+            return None  # crash before the append: the table shows nothing
+        cur = dsink.table_version(self.spark, self.target)
+        if cur != commit:
+            raise RuntimeError(
+                f"orphaned delta commit {commit} for id "
+                f"{self.job.ingestion_id} but table {self.target} is at "
+                f"version {cur}: later commits exist — restore manually, "
+                "then close the batch in the log"
+            )
+        if commit == 0:
+            _delete_dir(self.spark, self.target)
+        else:
+            dsink.restore_version(self.spark, self.target, commit - 1)
+        return "orphaned-delta-commit-restored"
 
 
 @dataclass
@@ -228,32 +399,24 @@ class IncrementalIngestJob:
         return f"{self.target_location.rstrip('/')}/.staging-{token}"
 
     def _cleanup_orphans(self, rows: list) -> None:
-        """Crash-recovery for the staged append (reference T5 analog).
-
-        Every append goes through a run-private staging dir whose path is
-        recorded in the STARTED row; the final file list is recorded in the
-        LOADED row BEFORE files move into place. Whatever the trailing log
-        record is, the crash point is therefore recoverable:
-
-        - batch died before the move (STARTED, maybe mid-staging-write):
-          delete the staging dir (never visible to readers — it is
-          dot-prefixed);
-        - batch died during/after the move but before the SUCCESS/
-          VALIDATION row (a LOADED row exists): delete the listed final
-          files (the moved ones) AND the staging dir (the unmoved ones).
-          Without this, the re-pulled range would out-count the source and
-          validation would fail on every retry.
+        """Close the id's last batch if a crash left it open.
 
         The decision is BATCH-aware, not trailing-row-aware: the runner
         appends a FAILED row when a job raises mid-commit, so the crash
         state (STARTED/LOADED) is usually NOT the trailing record. A batch
         counts as closed only by SUCCESS / VALIDATION_FAILURE / NO_DATA /
-        a prior cleanup marker logged at-or-after its STARTED row; an
+        a prior recovery marker logged at-or-after its STARTED row; an
         exception-text FAILED row does not close it (that was the
         duplicate-on-retry window this method exists to shut).
 
+        The recovery action follows the sink that WROTE the batch — read
+        from its STARTED payload — not this job's ``sink_format``: a
+        parquet batch's staged files must be deleted, a Delta batch's
+        commit restored (which raises without delta-spark, before any row
+        is logged).
+
         ``rows`` is the run's one :meth:`ExecutionLog.id_rows` snapshot
-        (this method only APPENDS cleanup markers, so the snapshot stays
+        (this method only APPENDS recovery markers, so the snapshot stays
         valid for the watermark resolution that follows it).
         """
         started = self.log.latest_entry(
@@ -265,14 +428,10 @@ class IncrementalIngestJob:
         batch = [
             r for r in rows if r["insert_datetime"] >= started["insert_datetime"]
         ]
-        closed = {STATUS_SUCCESS, STATUS_VALIDATION_FAILURE, STATUS_NO_DATA}
-        markers = {"orphaned-staging-cleaned", "orphaned-batch-cleaned"}
         for r in batch:
-            if r["execution_status"] in closed:
-                return
-            if (
+            if r["execution_status"] in _CLOSED or (
                 r["execution_status"] == STATUS_FAILED
-                and (r["reason_code"] or "") in markers
+                and (r["reason_code"] or "") in _ORPHAN_MARKERS
             ):
                 return
         loaded = max(
@@ -280,32 +439,21 @@ class IncrementalIngestJob:
             key=lambda r: r["insert_datetime"],
             default=None,
         )
-        staging = started["reason_code"] or ""
-        if loaded is None:
-            if staging.startswith(self._staging_dir("")):
-                _delete_dir(self.spark, staging)
-                self.log.append(
-                    self.ingestion_id,
-                    STATUS_FAILED,
-                    start_value=started["start_value"] or "",
-                    reason_code="orphaned-staging-cleaned",
-                )
-            return
-        try:
-            files = set(json.loads(loaded["reason_code"] or "[]"))
-        except ValueError:
-            files = set()
-        if files:
-            _delete_files(self.spark, files)
-        if staging.startswith(self._staging_dir("")):
-            _delete_dir(self.spark, staging)
-        self.log.append(
-            self.ingestion_id,
-            STATUS_FAILED,
-            start_value=loaded["start_value"] or "",
-            end_value=loaded["end_value"] or "",
-            reason_code="orphaned-batch-cleaned",
+        writer = (
+            _DeltaSink
+            if started["reason_code"] == _DeltaSink.started_payload
+            else _ParquetSink
         )
+        marker = writer(self).recover(started, loaded)
+        if marker is not None:
+            last = loaded or started
+            self.log.append(
+                self.ingestion_id,
+                STATUS_FAILED,
+                start_value=last["start_value"] or "",
+                end_value=last["end_value"] or "",
+                reason_code=marker,
+            )
 
     def run(self) -> IngestResult:
         if self.sink_format not in ("parquet", "delta"):
@@ -317,12 +465,12 @@ class IncrementalIngestJob:
                 self.ingestion_id, self.source.schema
             )
         if self.sink_format == "delta":
-            from .delta_sink import require_delta
-
             # loud before any log row burns: a misconfigured deployment
             # must not leave STARTED orphans per retry
-            require_delta("IncrementalIngestJob(sink_format='delta')")
-            return self._run_delta()
+            dsink.require_delta("IncrementalIngestJob(sink_format='delta')")
+            sink = _DeltaSink(self)
+        else:
+            sink = _ParquetSink(self)
         # one log snapshot serves orphan cleanup AND watermark resolution
         # (cleanup only appends marker rows, never SUCCESS rows)
         log_rows = self.log.id_rows(self.ingestion_id)
@@ -330,229 +478,79 @@ class IncrementalIngestJob:
         start = resolve_watermark(
             self.log, self.ingestion_id, self.integer_watermark, rows=log_rows
         )
-        staging = self._staging_dir(uuid.uuid4().hex)
         self.log.append(
             self.ingestion_id,
             STATUS_STARTED,
             start_value=start,
-            reason_code=staging,
+            reason_code=sink.started_payload,
         )
 
         delta = self._delta_frame(start)
+        partition_col = None
         if self.partition_spec is not None:
             delta = self.partition_spec.derive(delta)
+            partition_col = self.partition_spec.partition_column_name
 
         mn, mx, n = self._bounds(delta)
+        if n:
+            # The bounds pass and the write below are SEPARATE scans of the
+            # source. Against a live source (JDBC), rows committed in
+            # between with delta > mx would be written now yet the
+            # watermark only advances to mx — the next run re-pulls them
+            # as duplicates into the append-only lake. Cap the write at
+            # the observed mx so this batch is exactly the rows the
+            # bounds/validation saw; later rows belong to the next
+            # watermark window. (The reference's single chunked pull
+            # computes bounds DURING its one scan — this is the two-scan
+            # design's closing of that same contract.)
+            delta = delta.filter(self._delta_col() <= self._wm_lit(mx))
+            if self.delta_expr_cols:
+                # mx is least(per-column maxes), so rows whose coalesce
+                # delta lies in (mx, cap] were counted by _bounds but are
+                # excluded from this write — recount on the capped frame
+                # so the LOADED row's source_count matches what the commit
+                # holds (the excluded rows belong to the next window).
+                # Validation is skipped in coalesce mode, so nothing
+                # downstream would otherwise catch the overstatement.
+                n = delta.count()
         if n == 0:
             self.log.append(self.ingestion_id, STATUS_NO_DATA, start_value=start)
             return IngestResult(STATUS_NO_DATA, start)
 
-        # The bounds pass and the write below are SEPARATE scans of the
-        # source. Against a live source (JDBC), rows committed in between
-        # with delta > mx would be written now yet the watermark only
-        # advances to mx — the next run re-pulls them as duplicates into
-        # the append-only lake. Cap the write at the observed mx so this
-        # batch is exactly the rows the bounds/validation saw; later rows
-        # belong to the next watermark window. (The reference's single
-        # chunked pull computes bounds DURING its one scan — this is the
-        # two-scan design's closing of that same contract.)
-        delta = delta.filter(self._delta_col() <= self._wm_lit(mx))
-        if self.delta_expr_cols:
-            # mx is least(per-column maxes), so rows whose coalesce delta
-            # lies in (mx, cap] were counted by _bounds but are excluded
-            # from this write — recount on the capped frame so the LOADED
-            # row's source_count matches the files the commit lists (the
-            # excluded rows belong to the next window, not this batch).
-            # Validation is skipped in coalesce mode, so nothing downstream
-            # would otherwise catch the overstatement.
-            n = delta.count()
-            if n == 0:
-                self.log.append(
-                    self.ingestion_id, STATUS_NO_DATA, start_value=start
-                )
-                return IngestResult(STATUS_NO_DATA, start)
-
-        # staged commit: write the batch beside the lake, record the final
-        # destinations, THEN move into place — every crash point is
-        # recoverable from the log (see _cleanup_orphans)
-        writer = delta.write.mode("append").option("compression", "snappy")
-        if self.partition_spec is not None:
-            writer = writer.partitionBy(self.partition_spec.partition_column_name)
-        writer.parquet(staging)
-        staged = sorted(_list_files(self.spark, staging))
-        target = self.target_location.rstrip("/")
-        # listed paths are fully-qualified URIs (file:/..., s3a://...);
-        # splice the destination around the staging path inside them
-        moves = []
-        for f in staged:
-            i = f.find(staging)
-            if i < 0:  # pragma: no cover - FS returned an unrelated path
-                raise RuntimeError(f"staged file {f} outside {staging}")
-            moves.append((f, f[:i] + target + f[i + len(staging):]))
-        written = sorted(dst for _, dst in moves)
-
+        payload = sink.write(delta, partition_col)
         self.log.append(
             self.ingestion_id,
             STATUS_LOADED,
             start_value=mn,
             end_value=mx,
             source_count=n,
-            reason_code=json.dumps(written),
+            reason_code=payload,
         )
-        _move_files(self.spark, moves)
-        _delete_dir(self.spark, staging)
+        sink.publish()
 
         # Count validation (V1): lake rows under the same delta predicate
         # vs the source count. Skipped for coalesce watermarks, like the
         # reference (start_ingestion.py:109,134-138).
-        if self.delta_expr_cols:
-            self.log.append(
-                self.ingestion_id,
-                STATUS_SUCCESS,
-                start_value=mn,
-                end_value=mx,
-                source_count=n,
-                reason_code="validation-skipped",
-            )
-            self._maintain_latest(written)
-            return IngestResult(STATUS_SUCCESS, mn, mx, n, files=written)
-
-        lake = self.spark.read.parquet(self.target_location)
-        target_n = lake.filter(
-            (F.col(self.delta_field) >= self._wm_lit(start))
-            & (F.col(self.delta_field) <= self._wm_lit(mx))
-        ).count()
-        if target_n != n:
-            _delete_files(self.spark, set(written))
-            self.log.append(
-                self.ingestion_id,
-                STATUS_VALIDATION_FAILURE,
-                start_value=mn,
-                end_value=mx,
-                source_count=n,
-                target_count=target_n,
-                reason_code="count-mismatch-rolled-back",
-            )
-            return IngestResult(
-                STATUS_VALIDATION_FAILURE, mn, mx, n, target_n, written
-            )
-        self.log.append(
-            self.ingestion_id,
-            STATUS_SUCCESS,
-            start_value=mn,
-            end_value=mx,
-            source_count=n,
-            target_count=target_n,
-        )
-        self._maintain_latest(written)
-        return IngestResult(STATUS_SUCCESS, mn, mx, n, target_n, written)
-
-    def _run_delta(self) -> IngestResult:
-        """Delta-sink variant of :meth:`run` — same watermark/log/
-        validation contract, but the commit machinery collapses onto
-        Delta's transaction log:
-
-        - no staging dir / file moves / orphan cleanup — ``append_delta``
-          is atomic (a crash mid-write leaves NO visible commit);
-        - the LOADED row records the Delta commit VERSION instead of a
-          file list;
-        - validation rollback is ``RESTORE TO VERSION AS OF pre`` (or
-          dropping the table when this batch created it) instead of
-          deleting listed files;
-        - the latest zone is maintained by ``MERGE INTO`` over the
-          commit's change feed instead of a directory swap.
-
-        All Delta IO goes through module-level functions in
-        ``ingest.delta_sink`` so the orchestration (log-row ordering,
-        validation, watermark advancement) is testable by substituting
-        that seam — tests/test_delta_sink.py runs this method end-to-end
-        against a parquet-backed fake of the seam."""
-        from . import delta_sink as dsink
-
-        log_rows = self.log.id_rows(self.ingestion_id)
-        self._cleanup_orphans_delta(log_rows)
-        start = resolve_watermark(
-            self.log, self.ingestion_id, self.integer_watermark, rows=log_rows
-        )
-        self.log.append(
-            self.ingestion_id,
-            STATUS_STARTED,
-            start_value=start,
-            reason_code="delta-sink",
-        )
-
-        delta = self._delta_frame(start)
-        if self.partition_spec is not None:
-            delta = self.partition_spec.derive(delta)
-
-        mn, mx, n = self._bounds(delta)
-        if n == 0:
-            self.log.append(self.ingestion_id, STATUS_NO_DATA, start_value=start)
-            return IngestResult(STATUS_NO_DATA, start)
-
-        # same two-scan watermark cap as the parquet path (see run())
-        delta = delta.filter(self._delta_col() <= self._wm_lit(mx))
-        if self.delta_expr_cols:
-            n = delta.count()
-            if n == 0:
+        target_n = 0
+        if not self.delta_expr_cols:
+            target_n = sink.read().filter(
+                (F.col(self.delta_field) >= self._wm_lit(start))
+                & (F.col(self.delta_field) <= self._wm_lit(mx))
+            ).count()
+            if target_n != n:
+                reason = sink.rollback()
                 self.log.append(
-                    self.ingestion_id, STATUS_NO_DATA, start_value=start
+                    self.ingestion_id,
+                    STATUS_VALIDATION_FAILURE,
+                    start_value=mn,
+                    end_value=mx,
+                    source_count=n,
+                    target_count=target_n,
+                    reason_code=reason,
                 )
-                return IngestResult(STATUS_NO_DATA, start)
-
-        target = self.target_location.rstrip("/")
-        pre = dsink.table_version(self.spark, target)  # None: first commit
-        dsink.append_delta(
-            delta,
-            target,
-            self.partition_spec.partition_column_name
-            if self.partition_spec is not None
-            else None,
-        )
-        post = dsink.table_version(self.spark, target)
-        self.log.append(
-            self.ingestion_id,
-            STATUS_LOADED,
-            start_value=mn,
-            end_value=mx,
-            source_count=n,
-            reason_code=json.dumps({"delta_commit": post}),
-        )
-
-        if self.delta_expr_cols:
-            self.log.append(
-                self.ingestion_id,
-                STATUS_SUCCESS,
-                start_value=mn,
-                end_value=mx,
-                source_count=n,
-                reason_code="validation-skipped",
-            )
-            self._maintain_latest_delta(post)
-            return IngestResult(STATUS_SUCCESS, mn, mx, n)
-
-        lake = dsink.read_delta(self.spark, target)
-        target_n = lake.filter(
-            (F.col(self.delta_field) >= self._wm_lit(start))
-            & (F.col(self.delta_field) <= self._wm_lit(mx))
-        ).count()
-        if target_n != n:
-            if pre is None:
-                _delete_dir(self.spark, target)  # batch created the table
-            else:
-                dsink.restore_version(self.spark, target, pre)
-            self.log.append(
-                self.ingestion_id,
-                STATUS_VALIDATION_FAILURE,
-                start_value=mn,
-                end_value=mx,
-                source_count=n,
-                target_count=target_n,
-                reason_code="count-mismatch-restored",
-            )
-            return IngestResult(
-                STATUS_VALIDATION_FAILURE, mn, mx, n, target_n
-            )
+                return IngestResult(
+                    STATUS_VALIDATION_FAILURE, mn, mx, n, target_n, sink.files
+                )
         self.log.append(
             self.ingestion_id,
             STATUS_SUCCESS,
@@ -560,100 +558,10 @@ class IncrementalIngestJob:
             end_value=mx,
             source_count=n,
             target_count=target_n,
+            reason_code="validation-skipped" if self.delta_expr_cols else "",
         )
-        self._maintain_latest_delta(post)
-        return IngestResult(STATUS_SUCCESS, mn, mx, n, target_n)
-
-    def _cleanup_orphans_delta(self, rows: list) -> None:
-        """Delta twin of :meth:`_cleanup_orphans` — the T5 crash window
-        that remains under an atomic sink: a crash AFTER the append
-        commit but BEFORE the SUCCESS row. The watermark then still
-        points before the batch, so the next run would re-pull the same
-        range and append it AGAIN (duplicates the atomic commit cannot
-        prevent — it already landed). Recovery mirrors the parquet
-        path's file-list delete: the LOADED row records the orphaned
-        commit's VERSION; if the table is still at exactly that version
-        we RESTORE to the version before it (or drop the table when the
-        orphan was its first commit). If the table has moved past the
-        orphaned version, someone else committed on top — restoring
-        would destroy their data, so fail loudly for manual repair
-        (single-writer-per-target is the supported deployment, same as
-        the parquet path's concurrent-writer contract)."""
-        from . import delta_sink as dsink
-
-        started = self.log.latest_entry(
-            self.ingestion_id, STATUS_STARTED, rows=rows
-        )
-        if started is None or started["reason_code"] != "delta-sink":
-            return
-        batch = [
-            r for r in rows if r["insert_datetime"] >= started["insert_datetime"]
-        ]
-        closed = {STATUS_SUCCESS, STATUS_VALIDATION_FAILURE, STATUS_NO_DATA}
-        for r in batch:
-            if r["execution_status"] in closed:
-                return
-            if (
-                r["execution_status"] == STATUS_FAILED
-                and (r["reason_code"] or "") == "orphaned-delta-commit-restored"
-            ):
-                return
-        loaded = max(
-            (r for r in batch if r["execution_status"] == STATUS_LOADED),
-            key=lambda r: r["insert_datetime"],
-            default=None,
-        )
-        if loaded is None:
-            return  # crash before the append: the atomic sink shows nothing
-        try:
-            commit = json.loads(loaded["reason_code"] or "{}").get("delta_commit")
-        except ValueError:
-            commit = None
-        if commit is None:
-            return
-        target = self.target_location.rstrip("/")
-        cur = dsink.table_version(self.spark, target)
-        if cur != commit:
-            raise RuntimeError(
-                f"orphaned delta commit {commit} for id {self.ingestion_id} "
-                f"but table {target} is at version {cur}: later commits "
-                "exist — restore manually, then close the batch in the log"
-            )
-        if commit == 0:
-            _delete_dir(self.spark, target)
-        else:
-            dsink.restore_version(self.spark, target, commit - 1)
-        self.log.append(
-            self.ingestion_id,
-            STATUS_FAILED,
-            start_value=loaded["start_value"] or "",
-            end_value=loaded["end_value"] or "",
-            reason_code="orphaned-delta-commit-restored",
-        )
-
-    def _maintain_latest_delta(self, commit_version: int) -> None:
-        """Delta-path latest zone: MERGE the committed batch (re-read from
-        the table's change feed, never the lazy source frame — same
-        live-source argument as :meth:`_maintain_latest`) into
-        ``{target}__latest``."""
-        if not self.maintain_latest:
-            return
-        if not self.primary_key:
-            raise ValueError("maintain_latest requires a primary_key")
-        from . import delta_sink as dsink
-
-        target = self.target_location.rstrip("/")
-        batch = dsink.read_changes_delta(
-            self.spark, target, commit_version - 1
-        ).drop("_change_type", "_commit_version", "_commit_timestamp")
-        dsink.merge_latest_delta(
-            self.spark,
-            target + "__latest",
-            batch,
-            list(self.primary_key),
-            self._latest_order_col(),
-            list(self.latest_tie_breaks),
-        )
+        self._maintain_latest(sink)
+        return IngestResult(STATUS_SUCCESS, mn, mx, n, target_n, sink.files)
 
     def run_windows(self, until: str, window_hours: int = 24) -> list[IngestResult]:
         """Voluminous-table mode: pull in serial time windows until caught
@@ -726,33 +634,26 @@ class IncrementalIngestJob:
                 break
         return results
 
-    def _maintain_latest(self, written: list[str]) -> None:
-        """Merge the appended batch into the latest zone by re-reading the
-        WRITTEN FILES, not the source delta frame: the delta frame is lazy,
-        so merging it would re-scan the source at merge time — a row
-        updated between the lake append and the merge would make the
-        latest zone disagree with the lake (and a JDBC source would pay a
-        second remote scan). The written data files are the batch as the
-        lake actually recorded it; partition columns live in directory
-        names, not the files, so the read matches the pre-partition schema
-        merge_latest expects."""
+    def _maintain_latest(self, sink: _ParquetSink | _DeltaSink) -> None:
+        """Merge the committed batch into ``{target}__latest``. The batch
+        is re-read from what the sink committed, never the source delta
+        frame: that frame is lazy, so merging it would re-scan the source
+        at merge time — a row updated between the lake append and the
+        merge would make the latest zone disagree with the lake (and a
+        JDBC source would pay a second remote scan)."""
         if not self.maintain_latest:
             return
         if not self.primary_key:
             raise ValueError("maintain_latest requires a primary_key")
-        from .merge import merge_latest
-
-        merge_latest(
+        batch, merge = sink.latest_batch()
+        merge(
             self.spark,
             self.target_location.rstrip("/") + "__latest",
-            self.spark.read.parquet(*written),
+            batch,
             list(self.primary_key),
-            self._latest_order_col(),
+            # coalesce watermarks order the view by the plain delta field,
+            # matching the reference's view ORDER BY {delta} DESC
+            # (start_ingestion.py:369)
+            self.delta_field,
             list(self.latest_tie_breaks),
         )
-
-    def _latest_order_col(self) -> str:
-        # coalesce watermarks order the view by the delta expr's first col
-        # chain — use the plain delta field, matching the reference's view
-        # ORDER BY {delta} DESC (start_ingestion.py:369)
-        return self.delta_field

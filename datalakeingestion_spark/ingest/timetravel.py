@@ -33,7 +33,6 @@ travel replaces this module.
 
 from __future__ import annotations
 
-import json
 import re
 from datetime import datetime
 
@@ -49,6 +48,8 @@ from .watermark import (
     STATUS_SUCCESS,
     STATUS_VALIDATION_FAILURE,
     ExecutionLog,
+    committed_delta_version,
+    committed_files,
 )
 
 _TERMINAL = (STATUS_SUCCESS, STATUS_VALIDATION_FAILURE, STATUS_FAILED)
@@ -126,7 +127,7 @@ def _snapshot_files(
     commits = (  # metadata-sized: one collect answers both the existence
         # check and the file-list union (the former separate count() paid
         # a second job over the same window)
-        top.orderBy("version").select("files", "baseline").collect()
+        top.orderBy("version").select("version", "files", "baseline").collect()
     )
     if version is not None and len(commits) != version + 1:
         raise ValueError(
@@ -143,7 +144,7 @@ def _snapshot_files(
     )
     files: list[str] = []
     for row in commits[start:]:
-        files.extend(json.loads(row["files"]))
+        files.extend(_commit_files(row))
     missing = _missing(spark, files)
     if missing:
         raise RuntimeError(
@@ -200,8 +201,8 @@ def read_version(
     commits, so passing the log version straight through would silently
     read a different snapshot once any maintenance ran; instead the
     log's LOADED row for data-commit ``version`` recorded the Delta
-    commit it landed as (``reason_code`` → ``delta_commit``,
-    ingest/pipeline.py::_run_delta) and THAT version is what Delta
+    commit it landed as (``reason_code`` → ``delta_commit``, written by
+    the Delta sink in ingest/pipeline.py) and THAT version is what Delta
     reads. A snapshot with no recorded delta_commit (written before the
     table became Delta) raises rather than guessing."""
     from .delta_sink import is_delta_table, read_delta
@@ -215,12 +216,12 @@ def read_version(
 
 def _delta_commit_of(log: ExecutionLog, ingestion_id: int, version: int) -> int:
     """Map a dense 0-based LOG version to the DELTA commit version its
-    LOADED row recorded (``reason_code`` → ``delta_commit``,
-    ingest/pipeline.py::_run_delta). Raises for a nonexistent version or
-    one written by the parquet sink (whose reason_code is a file LIST,
-    not the {"delta_commit": N} dict) — guessing would silently read a
-    different snapshot once any OPTIMIZE/RESTORE commit shifted the
-    numbering."""
+    LOADED row recorded (``reason_code`` → ``delta_commit``, written by
+    the Delta sink in ingest/pipeline.py). Raises for a nonexistent
+    version or one written by the parquet sink (whose reason_code is a
+    file LIST, not the {"delta_commit": N} dict) — guessing would
+    silently read a different snapshot once any OPTIMIZE/RESTORE commit
+    shifted the numbering."""
     row = (
         history(log, ingestion_id)
         .filter(F.col("version") == version)
@@ -231,13 +232,7 @@ def _delta_commit_of(log: ExecutionLog, ingestion_id: int, version: int) -> int:
         raise ValueError(
             f"version {version} does not exist for id {ingestion_id}"
         )
-    try:
-        payload = json.loads(row["files"] or "{}")
-    except ValueError:
-        payload = None
-    commit = (
-        payload.get("delta_commit") if isinstance(payload, dict) else None
-    )
+    commit = committed_delta_version(row["files"])
     if commit is None:
         raise ValueError(
             f"log version {version} of id {ingestion_id} records no "
@@ -245,7 +240,19 @@ def _delta_commit_of(log: ExecutionLog, ingestion_id: int, version: int) -> int:
             "map it to a Delta snapshot; read via the parquet log "
             "path or pass a Delta commit version to read_delta"
         )
-    return int(commit)
+    return commit
+
+
+def _commit_files(row) -> list[str]:
+    """The file list a ``history`` row committed. A Delta-sink commit
+    records a version instead, which the parquet read path cannot use."""
+    files = committed_files(row["files"])
+    if files is None:
+        raise ValueError(
+            f"log version {row['version']} records no file list (written "
+            "by the Delta sink?) — read it through the Delta table"
+        )
+    return files
 
 
 def read_changes(
@@ -377,7 +384,7 @@ def read_changes(
         ).limit(0)
     file_version: dict[str, int] = {}
     for row in commits:
-        for f in json.loads(row["files"]):
+        for f in _commit_files(row):
             file_version[_norm(f)] = row["version"]
     missing = _missing(spark, list(file_version))
     if missing:

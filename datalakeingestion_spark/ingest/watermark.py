@@ -19,6 +19,7 @@ extractors/ingest_mysql_data.py:73-149):
 
 from __future__ import annotations
 
+import json
 import uuid
 from datetime import datetime, timedelta
 
@@ -59,6 +60,43 @@ BASELINE_MARKER = "compaction-baseline"
 DATETIME_EPOCH = "2020-01-01 00:00:00"
 INTEGER_EPOCH = "1"
 _TS_FMT = "%Y-%m-%d %H:%M:%S"
+
+
+# The LOADED row's reason_code records what the batch committed: the
+# parquet sink's final data-file list (a JSON array) or the Delta sink's
+# commit version ({"delta_commit": N}). Python code reads and writes that
+# payload only through these four functions.
+
+
+def files_payload(files: list[str]) -> str:
+    return json.dumps(files)
+
+
+def delta_commit_payload(version: int) -> str:
+    return json.dumps({"delta_commit": version})
+
+
+def _decode_payload(reason_code: str | None):
+    try:
+        return json.loads(reason_code or "null")
+    except ValueError:
+        return None
+
+
+def committed_files(reason_code: str | None) -> list[str] | None:
+    """Data files a parquet-sink LOADED row committed; None for any payload
+    that is not a file list (a Delta commit, free text, nothing)."""
+    payload = _decode_payload(reason_code)
+    return [str(f) for f in payload] if isinstance(payload, list) else None
+
+
+def committed_delta_version(reason_code: str | None) -> int | None:
+    """Delta commit version a Delta-sink LOADED row recorded; None for any
+    other payload."""
+    payload = _decode_payload(reason_code)
+    if isinstance(payload, dict) and payload.get("delta_commit") is not None:
+        return int(payload["delta_commit"])
+    return None
 
 
 class ExecutionLog:

@@ -25,7 +25,10 @@ FIXTURE_TABLES = (
 
 @pytest.fixture(scope="session")
 def spark(tmp_path_factory):
-    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
+    # 6g holds the whole suite. A 16g heap outgrows a 15 GB host part-way
+    # through the run; the kernel then kills the JVM and every later Spark
+    # test fails with ConnectionRefused.
+    os.environ.setdefault("SPARK_DRIVER_MEM", "6g")
     from datalakeingestion_spark.session import get_spark
 
     # Point the session warehouse (saveAsTable targets) and Derby's
