@@ -17,7 +17,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .merge import _fs
-from .watermark import committed_files, files_payload
+from .watermark import commits, committed_files, files_payload, norm_uri
 
 
 def count_data_files(spark: SparkSession, path: str) -> int:
@@ -108,25 +108,17 @@ def compact(
         if ingestion_id is None:
             raise ValueError("re-baselining needs ingestion_id with log")
         from .pipeline import _list_files
-        from .timetravel import history
 
         # span by COMMIT ORDER, not string order — a lexicographic max of
         # end_value regresses integer watermarks at digit-length
         # boundaries (the ADVICE-r1 watermark bug, same shape)
-        span = (
-            history(log, ingestion_id)
-            .agg(
-                F.min_by("start_value", "version").alias("lo"),
-                F.max_by("end_value", "version").alias("hi"),
-            )
-            .first()
-        )
-        if span["lo"] is not None:  # no committed history → nothing to do
+        cs = commits(log.id_rows(ingestion_id))
+        if cs:  # no committed history → nothing to do
             files = sorted(_list_files(spark, path))
             log.append_commit(
                 ingestion_id,
-                start_value=span["lo"],
-                end_value=span["hi"],
+                start_value=cs[0]["start_value"],
+                end_value=cs[-1]["end_value"],
                 source_count=n_before,
                 files_json=files_payload(files),
             )
@@ -161,7 +153,6 @@ def vacuum(
     Delta's "don't vacuum below the max transaction duration".
     ``now_ms`` is injectable for tests. Returns the deleted paths.
     """
-    import re as _re
     import time as _time
 
     from .delta_sink import is_delta_table, vacuum_delta
@@ -175,19 +166,11 @@ def vacuum(
     jvm, fs, p = _fs(spark, path)
     if not fs.exists(p):
         return []
-    scheme = _re.compile(r"^([a-z0-9]+):/+")
-    norm = lambda s: scheme.sub(r"\1:/", s)
-
-    referenced: set[str] = set()
-    rows = (
-        log.read()
-        .filter(F.col("lake_ingestion_id") == ingestion_id)
-        .select("reason_code")
-        .collect()
-    )
-    for row in rows:
-        files = committed_files(row["reason_code"]) or ()
-        referenced.update(norm(f) for f in files)
+    referenced = {
+        norm_uri(f)
+        for row in log.id_rows(ingestion_id)
+        for f in committed_files(row["reason_code"]) or ()
+    }
 
     cutoff = (now_ms if now_ms is not None else _time.time() * 1000) - (
         retention_seconds * 1000
@@ -206,7 +189,7 @@ def vacuum(
         # abfss://…)
         if "/." in fp.toUri().getPath():
             continue
-        if norm(fp.toString()) in referenced:
+        if norm_uri(fp.toString()) in referenced:
             continue
         if st.getModificationTime() >= cutoff:
             continue  # young file: maybe an in-flight writer — keep

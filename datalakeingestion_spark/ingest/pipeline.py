@@ -71,17 +71,9 @@ from .watermark import (
     committed_files,
     delta_commit_payload,
     files_payload,
+    open_batch,
     resolve_watermark,
 )
-
-# a batch is closed by one of these statuses, or by a FAILED row carrying
-# an orphan-recovery marker, logged at-or-after its STARTED row
-_CLOSED = {STATUS_SUCCESS, STATUS_VALIDATION_FAILURE, STATUS_NO_DATA}
-_ORPHAN_MARKERS = {
-    "orphaned-staging-cleaned",
-    "orphaned-batch-cleaned",
-    "orphaned-delta-commit-restored",
-}
 
 
 @dataclass
@@ -399,15 +391,8 @@ class IncrementalIngestJob:
         return f"{self.target_location.rstrip('/')}/.staging-{token}"
 
     def _cleanup_orphans(self, rows: list) -> None:
-        """Close the id's last batch if a crash left it open.
-
-        The decision is BATCH-aware, not trailing-row-aware: the runner
-        appends a FAILED row when a job raises mid-commit, so the crash
-        state (STARTED/LOADED) is usually NOT the trailing record. A batch
-        counts as closed only by SUCCESS / VALIDATION_FAILURE / NO_DATA /
-        a prior recovery marker logged at-or-after its STARTED row; an
-        exception-text FAILED row does not close it (that was the
-        duplicate-on-retry window this method exists to shut).
+        """Close the id's last batch if a crash left it open (the rule is
+        :func:`~.watermark.open_batch`).
 
         The recovery action follows the sink that WROTE the batch — read
         from its STARTED payload — not this job's ``sink_format``: a
@@ -419,26 +404,10 @@ class IncrementalIngestJob:
         (this method only APPENDS recovery markers, so the snapshot stays
         valid for the watermark resolution that follows it).
         """
-        started = self.log.latest_entry(
-            self.ingestion_id, STATUS_STARTED, rows=rows
-        )
-        if started is None:
+        batch = open_batch(rows)
+        if batch is None:
             return
-        # one batch's rows — a handful, driver-side by design
-        batch = [
-            r for r in rows if r["insert_datetime"] >= started["insert_datetime"]
-        ]
-        for r in batch:
-            if r["execution_status"] in _CLOSED or (
-                r["execution_status"] == STATUS_FAILED
-                and (r["reason_code"] or "") in _ORPHAN_MARKERS
-            ):
-                return
-        loaded = max(
-            (r for r in batch if r["execution_status"] == STATUS_LOADED),
-            key=lambda r: r["insert_datetime"],
-            default=None,
-        )
+        started, loaded = batch
         writer = (
             _DeltaSink
             if started["reason_code"] == _DeltaSink.started_payload

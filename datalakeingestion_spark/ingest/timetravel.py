@@ -16,9 +16,10 @@ The reference has no equivalent (its lake is mutate-in-place S3 prefixes);
 this is a beyond-reference capability enabled by the state-table design.
 
 Scale notes:
-- the log is metadata-sized (a handful of rows per run), so the
-  single-partition window used to pair LOADED rows with their terminal
-  status is a non-issue — it never sees data-scale rows;
+- the log is metadata-sized (a handful of rows per run): each reader
+  takes ONE ``ExecutionLog.id_rows`` snapshot (one small job) and pairs
+  LOADED rows with their terminal status on the driver
+  (``watermark.commits``);
 - reads list explicit data files, so Catalyst still prunes columns and
   pushes filters per file; partition columns are recovered from directory
   names via ``basePath``.
@@ -33,118 +34,79 @@ travel replaces this module.
 
 from __future__ import annotations
 
-import re
 from datetime import datetime
 
-_SCHEME_SLASHES = re.compile(r"^([a-z0-9]+):/+")
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .merge import _fs
 from .watermark import (
-    BASELINE_MARKER,
-    STATUS_FAILED,
-    STATUS_LOADED,
-    STATUS_SUCCESS,
-    STATUS_VALIDATION_FAILURE,
+    SCHEME_SLASHES,
     ExecutionLog,
+    commits,
     committed_delta_version,
     committed_files,
+    norm_uri,
 )
 
-_TERMINAL = (STATUS_SUCCESS, STATUS_VALIDATION_FAILURE, STATUS_FAILED)
+_HISTORY_SCHEMA = (
+    "version int, committed_at timestamp, start_value string, "
+    "end_value string, source_count bigint, num_files int, files string, "
+    "baseline boolean"
+)
 
 
 def history(log: ExecutionLog, ingestion_id: int) -> DataFrame:
-    """One row per COMMITTED batch, in commit order.
+    """One row per COMMITTED batch, in commit order — the rows of
+    :func:`~.watermark.commits` (which states the pairing rule and the
+    columns) over one :meth:`ExecutionLog.id_rows` snapshot, as a
+    DataFrame."""
+    return log.spark.createDataFrame(
+        commits(log.id_rows(ingestion_id)), _HISTORY_SCHEMA
+    )
 
-    A batch is committed iff its LOADED row is immediately followed (among
-    status-bearing rows) by a SUCCESS row: the pipeline appends
-    LOADED → moved files → SUCCESS, while a validation rollback appends
-    VALIDATION_FAILURE and orphan cleanup appends FAILED — both of which
-    un-commit the files the LOADED row listed. Empty-window SUCCESS rows
-    (run_windows) carry no files and are not data commits.
 
-    Columns: version (0-based), committed_at, start_value, end_value,
-    source_count, num_files, files (json array string), baseline (true
-    for a compaction re-baseline commit, whose file list is COMPLETE —
-    it replaces everything before it rather than extending it).
-    """
-    rows = (
-        log.read()
-        .filter(F.col("lake_ingestion_id") == ingestion_id)
-        .filter(F.col("execution_status").isin(STATUS_LOADED, *_TERMINAL))
-    )
-    # single-partition window: the log holds O(runs) metadata rows, never
-    # data-scale rows (see module docstring). Secondary key: if a LOADED
-    # row and its terminal row ever land on the same clock microsecond,
-    # LOADED must still sort first or the lead() pairing flips.
-    status_rank = F.when(F.col("execution_status") == STATUS_LOADED, 0).otherwise(1)
-    w = Window.orderBy("insert_datetime", status_rank)
-    paired = (
-        rows.withColumn("next_status", F.lead("execution_status").over(w))
-        .withColumn("next_reason", F.lead("reason_code").over(w))
-        .withColumn("committed_at", F.lead("insert_datetime").over(w))
-        .filter(
-            (F.col("execution_status") == STATUS_LOADED)
-            & (F.col("next_status") == STATUS_SUCCESS)
-        )
-    )
-    return (
-        paired.withColumn(
-            "version",
-            F.row_number().over(Window.orderBy("committed_at")) - F.lit(1),
-        )
-        .withColumn(
-            "num_files", F.size(F.from_json("reason_code", "array<string>"))
-        )
-        .select(
-            "version",
-            "committed_at",
-            "start_value",
-            "end_value",
-            "source_count",
-            "num_files",
-            F.col("reason_code").alias("files"),
-            (F.col("next_reason") == BASELINE_MARKER).alias("baseline"),
-        )
-    )
+def _instant(value: datetime | str) -> datetime:
+    """A cutoff as the naive local datetime collected log timestamps use
+    (a string is 'YYYY-MM-DD HH:MM:SS[.ffffff]')."""
+    if isinstance(value, str):
+        fmt = "%Y-%m-%d %H:%M:%S.%f" if "." in value else "%Y-%m-%d %H:%M:%S"
+        return datetime.strptime(value, fmt)
+    if value.tzinfo is not None:
+        return value.astimezone().replace(tzinfo=None)
+    return value
+
+
+def _since_baseline(cs: list) -> list:
+    """A baseline commit's list is complete: the commits from the LATEST
+    baseline onward."""
+    start = max((i for i, c in enumerate(cs) if c["baseline"]), default=0)
+    return cs[start:]
 
 
 def _snapshot_files(
     spark: SparkSession,
-    log: ExecutionLog,
+    cs: list,
     ingestion_id: int,
     *,
     version: int | None = None,
     as_of: datetime | None = None,
 ) -> list[str]:
-    hist = history(log, ingestion_id)
     if version is not None:
-        top = hist.filter(F.col("version") <= version)
+        top = [c for c in cs if c["version"] <= version]
+        if len(top) != version + 1:
+            raise ValueError(
+                f"version {version} does not exist for id {ingestion_id}"
+            )
     else:
-        top = hist.filter(F.col("committed_at") <= F.lit(as_of))
-    commits = (  # metadata-sized: one collect answers both the existence
-        # check and the file-list union (the former separate count() paid
-        # a second job over the same window)
-        top.orderBy("version").select("version", "files", "baseline").collect()
-    )
-    if version is not None and len(commits) != version + 1:
-        raise ValueError(
-            f"version {version} does not exist for id {ingestion_id}"
-        )
-    if not commits:
+        top = [c for c in cs if c["committed_at"] <= as_of]
+    if not top:
         raise ValueError(
             f"no committed snapshot for id {ingestion_id} at the requested point"
         )
-    # a baseline commit's list is complete: union only from the LATEST
-    # baseline at or before the requested point
-    start = max(
-        (i for i, r in enumerate(commits) if r["baseline"]), default=0
-    )
     files: list[str] = []
-    for row in commits[start:]:
-        files.extend(_commit_files(row))
+    for c in _since_baseline(top):
+        files.extend(_commit_files(c))
     missing = _missing(spark, files)
     if missing:
         raise RuntimeError(
@@ -161,24 +123,20 @@ def _missing(spark: SparkSession, files: list[str]) -> list[str]:
     DIRECTORY rather than one exists() round-trip per file (a snapshot can
     reference tens of thousands of files but only O(partitions) dirs)."""
     jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    by_parent: dict[str, list[str]] = {}
+    by_parent: dict[str, list[tuple[str, str]]] = {}
     for f in files:
         p = jvm.org.apache.hadoop.fs.Path(f)
-        by_parent.setdefault(p.getParent().toString(), []).append(f)
+        by_parent.setdefault(p.getParent().toString(), []).append(
+            (f, p.getName())
+        )
     out = []
-    for parent, fs_files in by_parent.items():
-        pp = jvm.org.apache.hadoop.fs.Path(parent)
-        fs = pp.getFileSystem(conf)
+    for parent, named in by_parent.items():
+        _, fs, pp = _fs(spark, parent)
         try:
-            existing = {
-                s.getPath().getName() for s in fs.listStatus(pp)
-            }
+            existing = {s.getPath().getName() for s in fs.listStatus(pp)}
         except Exception:  # directory itself gone
             existing = set()
-        for f in fs_files:
-            if jvm.org.apache.hadoop.fs.Path(f).getName() not in existing:
-                out.append(f)
+        out.extend(f for f, name in named if name not in existing)
     return sorted(out)
 
 
@@ -207,14 +165,15 @@ def read_version(
     table became Delta) raises rather than guessing."""
     from .delta_sink import is_delta_table, read_delta
 
+    cs = commits(log.id_rows(ingestion_id))
     if is_delta_table(spark, base_path):
-        commit = _delta_commit_of(log, ingestion_id, version)
+        commit = _delta_commit_of(cs, ingestion_id, version)
         return read_delta(spark, base_path, version=commit)
-    files = _snapshot_files(spark, log, ingestion_id, version=version)
+    files = _snapshot_files(spark, cs, ingestion_id, version=version)
     return spark.read.option("basePath", base_path).parquet(*files)
 
 
-def _delta_commit_of(log: ExecutionLog, ingestion_id: int, version: int) -> int:
+def _delta_commit_of(cs: list, ingestion_id: int, version: int) -> int:
     """Map a dense 0-based LOG version to the DELTA commit version its
     LOADED row recorded (``reason_code`` → ``delta_commit``, written by
     the Delta sink in ingest/pipeline.py). Raises for a nonexistent
@@ -222,12 +181,7 @@ def _delta_commit_of(log: ExecutionLog, ingestion_id: int, version: int) -> int:
     file LIST, not the {"delta_commit": N} dict) — guessing would
     silently read a different snapshot once any OPTIMIZE/RESTORE commit
     shifted the numbering."""
-    row = (
-        history(log, ingestion_id)
-        .filter(F.col("version") == version)
-        .select("files")
-        .first()
-    )
+    row = next((c for c in cs if c["version"] == version), None)
     if row is None:
         raise ValueError(
             f"version {version} does not exist for id {ingestion_id}"
@@ -315,42 +269,27 @@ def read_changes(
     """
     from .delta_sink import is_delta_table, read_changes_delta
 
-    if after is not None and isinstance(after, str):
-        fmt = (
-            "%Y-%m-%d %H:%M:%S.%f" if "." in after else "%Y-%m-%d %H:%M:%S"
-        )
-        after = datetime.strptime(after, fmt)
+    cs = commits(log.id_rows(ingestion_id))
+    if since_version is not None:
+        consumed = [c for c in cs if c["version"] <= since_version]
+    elif after is not None:
+        after = _instant(after)
+        consumed = [c for c in cs if c["committed_at"] <= after]
+    else:
+        consumed = []
     if is_delta_table(spark, base_path):
         if since_version is not None:
-            since_commit = _delta_commit_of(log, ingestion_id, since_version)
-        elif after is not None:
-            row = (  # latest log version already consumed at the cutoff
-                history(log, ingestion_id)
-                .filter(F.col("committed_at") <= F.lit(after))
-                .orderBy(F.col("version").desc())
-                .select("version")
-                .first()
+            since_commit = _delta_commit_of(cs, ingestion_id, since_version)
+        elif consumed:  # latest log version already consumed at the cutoff
+            since_commit = _delta_commit_of(
+                cs, ingestion_id, consumed[-1]["version"]
             )
-            since_commit = (
-                -1  # whole feed: every log commit is after the cutoff
-                if row is None
-                else _delta_commit_of(log, ingestion_id, row["version"])
-            )
-        else:
-            since_commit = -1  # full CDF replay from commit 0
+        else:  # whole feed: full replay, or every commit is after the cutoff
+            since_commit = -1
         return read_changes_delta(spark, base_path, since_commit)
-    hist = history(log, ingestion_id)
     incremental = since_version is not None or after is not None
-    if since_version is not None:
-        picked = hist.filter(F.col("version") > since_version)
-    elif after is not None:
-        picked = hist.filter(F.col("committed_at") > F.lit(after))
-    else:
-        picked = hist
-    commits = (  # metadata-sized
-        picked.orderBy("version").select("version", "files", "baseline").collect()
-    )
-    if incremental and any(r["baseline"] for r in commits):
+    picked = cs[len(consumed):]
+    if incremental and any(c["baseline"] for c in picked):
         # A compaction re-baseline commit's file list is the COMPLETE
         # table, not a delta — returning it would silently re-deliver
         # every pre-compaction row as "new". (When the compaction also
@@ -367,25 +306,16 @@ def read_changes(
     if not incremental:
         # full replay = current content: union from the LATEST baseline
         # (complete list) onward, exactly like a snapshot read
-        start = max(
-            (i for i, r in enumerate(commits) if r["baseline"]), default=0
-        )
-        commits = commits[start:]
-
-    def _norm(p: str) -> str:
-        # Hadoop Path.toString() says "file:/x"; _metadata.file_path may
-        # render the same file as "file:///x" — collapse both forms
-        return _SCHEME_SLASHES.sub(r"\1:/", p)
-
-    if not commits:
+        picked = _since_baseline(picked)
+    if not picked:
         live = spark.read.option("basePath", base_path).parquet(base_path)
         return live.withColumn(
             "_commit_version", F.lit(None).cast("long")
         ).limit(0)
     file_version: dict[str, int] = {}
-    for row in commits:
-        for f in _commit_files(row):
-            file_version[_norm(f)] = row["version"]
+    for c in picked:
+        for f in _commit_files(c):
+            file_version[norm_uri(f)] = c["version"]
     missing = _missing(spark, list(file_version))
     if missing:
         raise RuntimeError(
@@ -401,7 +331,7 @@ def read_changes(
         *file_version.keys()
     )
     norm = F.regexp_replace(
-        F.col("_metadata.file_path"), r"^([a-z0-9]+):/+", r"$1:/"
+        F.col("_metadata.file_path"), SCHEME_SLASHES.pattern, r"$1:/"
     )
     return (
         data.withColumn("_file", norm)
@@ -422,14 +352,13 @@ def read_as_of(
     ``timestampAsOf`` when ``base_path`` is a Delta table."""
     from .delta_sink import is_delta_table, read_delta
 
-    if isinstance(as_of, str):
-        fmt = "%Y-%m-%d %H:%M:%S.%f" if "." in as_of else "%Y-%m-%d %H:%M:%S"
-        as_of = datetime.strptime(as_of, fmt)
+    as_of = _instant(as_of)
     if is_delta_table(spark, base_path):
         return read_delta(
             spark, base_path, as_of=as_of.strftime("%Y-%m-%d %H:%M:%S.%f")
         )
-    files = _snapshot_files(spark, log, ingestion_id, as_of=as_of)
+    cs = commits(log.id_rows(ingestion_id))
+    files = _snapshot_files(spark, cs, ingestion_id, as_of=as_of)
     return spark.read.option("basePath", base_path).parquet(*files)
 
 

@@ -15,17 +15,26 @@ extractors/ingest_mysql_data.py:73-149):
   bumped by +1 second (datetime) or +1 (integer). The +1s bump can skip
   rows committed within the same second after the previous read — a known
   reference gap, preserved for parity (SURVEY.md §4).
+
+The module is also the log's one reader: which batches committed
+(:func:`commits`) and whether the last batch was left open
+(:func:`open_batch`) are plain functions over one
+:meth:`ExecutionLog.id_rows` snapshot, shared by the pipeline, time
+travel and maintenance.
 """
 
 from __future__ import annotations
 
 import json
+import re
 import uuid
 from datetime import datetime, timedelta
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .merge import _fs
 
 # 8 columns per the reference (config/basic_config.py:54-57).
 LOG_SCHEMA = T.StructType(
@@ -51,6 +60,18 @@ STATUS_FAILED = "failed"
 # a table whose task_order stage never ran because an upstream stage
 # failed (runner barrier semantics — Airflow's all_success trigger rule)
 STATUS_SKIPPED = "skipped-upstream-failed"
+
+# statuses that end a LOADED row's batch; the batch committed iff it is
+# SUCCESS (see commits)
+_TERMINAL = (STATUS_SUCCESS, STATUS_VALIDATION_FAILURE, STATUS_FAILED)
+# a batch is closed by one of these statuses, or by a FAILED row carrying
+# an orphan-recovery marker, logged at-or-after its STARTED row
+_CLOSED = {STATUS_SUCCESS, STATUS_VALIDATION_FAILURE, STATUS_NO_DATA}
+_ORPHAN_MARKERS = {
+    "orphaned-staging-cleaned",
+    "orphaned-batch-cleaned",
+    "orphaned-delta-commit-restored",
+}
 
 # reason_code of the SUCCESS row a compaction re-baseline writes; history
 # treats such a commit's file list as COMPLETE (it replaces, not extends,
@@ -99,6 +120,102 @@ def committed_delta_version(reason_code: str | None) -> int | None:
     return None
 
 
+# Hadoop's Path.toString() writes "file:/x" where a scan's
+# _metadata.file_path writes "file:///x"; file URIs are compared after
+# collapsing the slashes that follow the scheme.
+SCHEME_SLASHES = re.compile(r"^([a-z0-9]+):/+")
+
+
+def norm_uri(path: str) -> str:
+    return SCHEME_SLASHES.sub(r"\1:/", path)
+
+
+def _latest(rows: list, status: str | None = None):
+    """Most recent row (argmax over insert_datetime), optionally of one
+    status; None when there is none."""
+    return max(
+        (r for r in rows if status is None or r["execution_status"] == status),
+        key=lambda r: r["insert_datetime"],
+        default=None,
+    )
+
+
+def commits(rows: list) -> list[Row]:
+    """One row per COMMITTED batch, in commit order, from an
+    :meth:`ExecutionLog.id_rows` snapshot (the rows of
+    ``timetravel.history``).
+
+    A batch is committed iff its LOADED row is immediately followed,
+    among LOADED and terminal rows ordered by insert_datetime (LOADED
+    first on a tie), by a SUCCESS row: the pipeline appends LOADED →
+    moved files → SUCCESS, while a validation rollback appends
+    VALIDATION_FAILURE and orphan cleanup appends FAILED — both of which
+    un-commit the files the LOADED row listed. Empty-window SUCCESS rows
+    (run_windows) carry no files and are not data commits.
+
+    Fields: version (dense, 0-based), committed_at (the SUCCESS row's
+    instant), start_value, end_value, source_count, num_files (None when
+    the payload is not a file list), files (the LOADED payload), baseline
+    (true for a compaction re-baseline commit, whose file list is
+    COMPLETE — it replaces everything before it rather than extending
+    it)."""
+    paired = sorted(
+        (r for r in rows if r["execution_status"] in (STATUS_LOADED, *_TERMINAL)),
+        # LOADED first when it shares an instant with its terminal row
+        key=lambda r: (
+            r["insert_datetime"],
+            r["execution_status"] != STATUS_LOADED,
+        ),
+    )
+    out: list[Row] = []
+    for loaded, nxt in zip(paired, paired[1:]):
+        if (
+            loaded["execution_status"] != STATUS_LOADED
+            or nxt["execution_status"] != STATUS_SUCCESS
+        ):
+            continue
+        files = committed_files(loaded["reason_code"])
+        out.append(
+            Row(
+                version=len(out),
+                committed_at=nxt["insert_datetime"],
+                start_value=loaded["start_value"],
+                end_value=loaded["end_value"],
+                source_count=loaded["source_count"],
+                num_files=None if files is None else len(files),
+                files=loaded["reason_code"],
+                baseline=nxt["reason_code"] == BASELINE_MARKER,
+            )
+        )
+    return out
+
+
+def open_batch(rows: list):
+    """``(STARTED row, its latest LOADED row or None)`` when a crash left
+    the id's last batch open in this :meth:`ExecutionLog.id_rows`
+    snapshot; None when that batch is closed or there is none.
+
+    The decision is BATCH-aware, not trailing-row-aware: the runner
+    appends a FAILED row when a job raises mid-commit, so the crash state
+    (STARTED/LOADED) is usually NOT the trailing record. A batch counts as
+    closed only by SUCCESS / VALIDATION_FAILURE / NO_DATA / a prior
+    recovery marker logged at-or-after its STARTED row; an exception-text
+    FAILED row does not close it (that was the duplicate-on-retry window
+    orphan recovery exists to shut)."""
+    started = _latest(rows, STATUS_STARTED)
+    if started is None:
+        return None
+    # one batch's rows — a handful, driver-side by design
+    batch = [r for r in rows if r["insert_datetime"] >= started["insert_datetime"]]
+    for r in batch:
+        if r["execution_status"] in _CLOSED or (
+            r["execution_status"] == STATUS_FAILED
+            and (r["reason_code"] or "") in _ORPHAN_MARKERS
+        ):
+            return None
+    return started, _latest(batch, STATUS_LOADED)
+
+
 class ExecutionLog:
     """Append-only parquet state table (the Delta-table shape without the
     Delta dependency; single-row appends are driver-side and tiny).
@@ -116,10 +233,8 @@ class ExecutionLog:
         self.path = path
 
     def _exists(self) -> bool:
-        jvm = self.spark.sparkContext._jvm
-        conf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(self.path)
-        return p.getFileSystem(conf).exists(p)
+        _, fs, p = _fs(self.spark, self.path)
+        return fs.exists(p)
 
     def read(self) -> DataFrame:
         """Missing path == genuinely empty log (first run). Any OTHER read
@@ -230,8 +345,8 @@ class ExecutionLog:
         both rows land in a single parquet write, so no crash point can
         leave a dangling LOADED whose reason_code lists LIVE lake files —
         which orphan cleanup would otherwise delete. The SUCCESS row is
-        stamped 1 µs after the LOADED row so the history pairing window
-        (ordered by insert_datetime) is deterministic."""
+        stamped 1 µs after the LOADED row, so :func:`commits`, which
+        pairs rows in insert_datetime order, always pairs these two."""
         t0 = datetime.now()
         t1 = t0 + timedelta(microseconds=1)
         self._write_batch(
@@ -280,14 +395,7 @@ class ExecutionLog:
         scan with an :meth:`id_rows` snapshot already in hand."""
         if rows is None:
             rows = self.id_rows(ingestion_id)
-        cand = [
-            r
-            for r in rows
-            if status is None or r["execution_status"] == status
-        ]
-        if not cand:
-            return None
-        return max(cand, key=lambda r: r["insert_datetime"])
+        return _latest(rows, status)
 
     def last_success_end(
         self,

@@ -44,6 +44,7 @@ from .ingest.views import register_latest_view
 from .ingest.watermark import (
     STATUS_EXTRACTION_FAILURE,
     STATUS_FAILED,
+    STATUS_NO_DATA,
     STATUS_SKIPPED,
     STATUS_SUCCESS,
     STATUS_VALIDATION_FAILURE,
@@ -258,7 +259,7 @@ def main(argv: Sequence[str] | None = None) -> int:
     for rid, res in sorted(report.results.items()):
         print(f"[{rid}] {res.status} rows={res.source_count}")
     return 0 if all(
-        r.status in (STATUS_SUCCESS, "no-data-to-load")
+        r.status in (STATUS_SUCCESS, STATUS_NO_DATA)
         for r in report.results.values()
     ) else 1
 

@@ -18,13 +18,19 @@ from datalakeingestion_spark.ingest.timetravel import (
     read_version,
 )
 from datalakeingestion_spark.ingest.watermark import (
+    STATUS_FAILED,
+    STATUS_LOADED,
+    STATUS_NO_DATA,
+    STATUS_STARTED,
     STATUS_SUCCESS,
     STATUS_VALIDATION_FAILURE,
     ExecutionLog,
+    delta_commit_payload,
 )
 from datalakeingestion_spark.sources.fixtures import load_table
 
 from .conftest import SF_SMALL
+from .test_delta_sink import fake_delta  # noqa: F401 - fixture
 
 CAP1 = "2024-01-10 00:00:00"
 CAP2 = "2024-01-20 00:00:00"
@@ -338,3 +344,219 @@ def test_version_diff_tags_added_and_removed(spark, events, tmp_path):
     assert rev.filter(F.col("_change") == "removed").count() == r2.source_count
 
     assert version_diff(spark, log, 1, 1, 1, target).count() == 0
+
+
+# ---------------------------------------------------------------------------
+# The history() contract, pinned on hand-written log rows
+# ---------------------------------------------------------------------------
+
+HISTORY_SCHEMA = (
+    "struct<version:int,committed_at:timestamp,start_value:string,"
+    "end_value:string,source_count:bigint,num_files:int,files:string,"
+    "baseline:boolean>"
+)
+
+
+def _row(status, ts, reason="", start="", end="", n=0, ingestion_id=1):
+    from datetime import datetime
+
+    at = datetime(2024, 1, 1, 0, 0, ts)
+    return (ingestion_id, status, start, end, n, n, reason, at)
+
+
+def test_history_schema_is_pinned(spark, tmp_path):
+    empty = ExecutionLog(spark, str(tmp_path / "empty"))
+    assert history(empty, 1).schema.simpleString() == HISTORY_SCHEMA
+    assert history(empty, 1).collect() == []
+
+    log = ExecutionLog(spark, str(tmp_path / "log"))
+    log.append(1, STATUS_LOADED, "a", "b", 3, reason_code='["f1", "f2"]')
+    log.append(1, STATUS_SUCCESS, "a", "b", 3, 3)
+    hist = history(log, 1)
+    assert hist.schema.simpleString() == HISTORY_SCHEMA
+    (h,) = hist.collect()
+    assert (h["version"], h["start_value"], h["end_value"]) == (0, "a", "b")
+    assert (h["source_count"], h["num_files"]) == (3, 2)
+    assert h["files"] == '["f1", "f2"]' and h["baseline"] is False
+
+
+def test_history_num_files_is_null_for_a_delta_commit(spark, tmp_path):
+    log = ExecutionLog(spark, str(tmp_path / "log"))
+    payload = delta_commit_payload(4)
+    log.append(1, STATUS_LOADED, "a", "b", 3, reason_code=payload)
+    log.append(1, STATUS_SUCCESS, "a", "b", 3, 3)
+    (h,) = history(log, 1).collect()
+    assert h["num_files"] is None
+    assert h["files"] == payload
+
+
+def test_history_baseline_only_on_compaction_commit(spark, tmp_path):
+    log = ExecutionLog(spark, str(tmp_path / "log"))
+    log.append(1, STATUS_LOADED, "1", "5", 5, reason_code='["f1"]')
+    log.append(1, STATUS_SUCCESS, "1", "5", 5, 5, reason_code="")
+    log.append_commit(1, "1", "5", 5, '["c1"]')
+    log.append(1, STATUS_LOADED, "6", "9", 4, reason_code='["f2"]')
+    log.append(
+        1, STATUS_SUCCESS, "6", "9", 4, reason_code="validation-skipped"
+    )
+    hist = history(log, 1).orderBy("version").collect()
+    assert [h["version"] for h in hist] == [0, 1, 2]
+    assert [h["baseline"] for h in hist] == [False, True, False]
+    assert [h["files"] for h in hist] == ['["f1"]', '["c1"]', '["f2"]']
+
+
+def test_history_pairs_loaded_with_the_next_terminal_row(spark, tmp_path):
+    """A LOADED row is a commit only when the next LOADED-or-terminal row
+    is SUCCESS. Rolled-back and orphan-cleaned batches are absent,
+    STARTED/NO_DATA rows are ignored, an empty-window SUCCESS with no
+    LOADED row is no commit, versions stay dense, committed_at is the
+    SUCCESS row's instant, and LOADED sorts first on a timestamp tie."""
+    log = ExecutionLog(spark, str(tmp_path / "log"))
+    log._write_batch(
+        [
+            _row(STATUS_STARTED, 0),
+            _row(STATUS_LOADED, 1, '["a"]', "s0", "e0", 1),
+            _row(STATUS_SUCCESS, 2),
+            _row(STATUS_LOADED, 3, '["b"]', "s1", "e1", 2),
+            _row(STATUS_VALIDATION_FAILURE, 4, "count-mismatch-rolled-back"),
+            _row(STATUS_LOADED, 5, '["c"]', "s2", "e2", 3),
+            _row(STATUS_FAILED, 6, "orphaned-batch-cleaned"),
+            _row(STATUS_NO_DATA, 7),
+            _row(STATUS_SUCCESS, 8, "empty-window"),
+            # the SUCCESS row comes first in the file, on the same instant
+            _row(STATUS_SUCCESS, 9),
+            _row(STATUS_LOADED, 9, '["d"]', "s3", "e3", 4),
+        ]
+    )
+    # another id's commit never shows in id 1's history
+    log._write_batch(
+        [
+            _row(STATUS_LOADED, 10, '["x"]', ingestion_id=2),
+            _row(STATUS_SUCCESS, 11, ingestion_id=2),
+        ]
+    )
+    hist = history(log, 1).orderBy("version").collect()
+    assert [h["version"] for h in hist] == [0, 1]
+    assert [h["files"] for h in hist] == ['["a"]', '["d"]']
+    assert [h["start_value"] for h in hist] == ["s0", "s3"]
+    assert [h["committed_at"].second for h in hist] == [2, 9]
+    assert [h["source_count"] for h in hist] == [1, 4]
+
+
+def test_read_as_of_commit_instant_includes_that_commit(
+    spark, events, tmp_path
+):
+    from datetime import timedelta
+
+    r1 = _job(spark, events, tmp_path, end_value_cap=CAP1).run()
+    r2 = _job(spark, events, tmp_path).run()
+    assert [r.status for r in (r1, r2)] == [STATUS_SUCCESS] * 2
+    log = ExecutionLog(spark, str(tmp_path / "log"))
+    target = str(tmp_path / "lake" / "events")
+    at = history(log, 1).orderBy("version").collect()[1]["committed_at"]
+
+    assert read_as_of(spark, log, 1, at, target).count() == events.count()
+    before = at - timedelta(microseconds=1)
+    assert read_as_of(spark, log, 1, before, target).count() == r1.source_count
+    as_text = at.strftime("%Y-%m-%d %H:%M:%S.%f")
+    assert read_as_of(spark, log, 1, as_text, target).count() == events.count()
+
+
+# ---------------------------------------------------------------------------
+# Every log reader takes one id_rows snapshot and no other log scan
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture()
+def log_reads(monkeypatch):
+    """Counts ``ExecutionLog.id_rows`` snapshots, and ``ExecutionLog.read``
+    calls made outside one."""
+    calls = {"id_rows": 0, "read": 0, "read_outside_id_rows": 0}
+    depth = []
+    id_rows, read = ExecutionLog.id_rows, ExecutionLog.read
+
+    def counted_id_rows(self, ingestion_id):
+        calls["id_rows"] += 1
+        depth.append(1)
+        try:
+            return id_rows(self, ingestion_id)
+        finally:
+            depth.pop()
+
+    def counted_read(self):
+        calls["read"] += 1
+        if not depth:
+            calls["read_outside_id_rows"] += 1
+        return read(self)
+
+    monkeypatch.setattr(ExecutionLog, "id_rows", counted_id_rows)
+    monkeypatch.setattr(ExecutionLog, "read", counted_read)
+
+    def measure(fn):
+        for k in calls:
+            calls[k] = 0
+        fn()
+        return dict(calls)
+
+    return measure
+
+
+ONE_SNAPSHOT = {"id_rows": 1, "read": 1, "read_outside_id_rows": 0}
+
+
+def test_parquet_readers_take_one_log_snapshot(
+    spark, events, tmp_path, log_reads
+):
+    from datalakeingestion_spark.ingest.maintenance import vacuum
+    from datalakeingestion_spark.ingest.timetravel import read_changes
+
+    _job(spark, events, tmp_path, end_value_cap=CAP1).run()
+    log = ExecutionLog(spark, str(tmp_path / "log"))
+    target = str(tmp_path / "lake" / "events")
+    got = {"run": log_reads(_job(spark, events, tmp_path).run)}
+    at = history(log, 1).orderBy("version").collect()[0]["committed_at"]
+    readers = {
+        "read_version": lambda: read_version(spark, log, 1, 1, target),
+        "read_as_of": lambda: read_as_of(spark, log, 1, at, target),
+        "read_changes(since_version)": lambda: read_changes(
+            spark, log, 1, target, since_version=0
+        ),
+        "read_changes(after)": lambda: read_changes(
+            spark, log, 1, target, after=at
+        ),
+        "read_changes(replay)": lambda: read_changes(spark, log, 1, target),
+        "vacuum": lambda: vacuum(spark, target, log, 1),
+        "compact": lambda: compact(
+            spark, target, partition_col="ts_part", log=log, ingestion_id=1
+        ),
+    }
+    got.update({name: log_reads(fn) for name, fn in readers.items()})
+    assert got == {name: ONE_SNAPSHOT for name in got}
+
+
+def test_delta_read_changes_takes_one_log_snapshot(
+    spark, events, tmp_path, fake_delta, monkeypatch, log_reads
+):
+    from datalakeingestion_spark.ingest import delta_sink as dsink
+    from datalakeingestion_spark.ingest.timetravel import read_changes
+
+    delta = dict(partition_spec=None, sink_format="delta")
+    job = _job(spark, events, tmp_path, end_value_cap=CAP1, **delta)
+    job.run()
+    _job(spark, events, tmp_path, **delta).run()
+    monkeypatch.setattr(dsink, "is_delta_table", lambda s, p: True)
+    at = history(job.log, 1).orderBy("version").collect()[0]["committed_at"]
+    modes = {
+        "since_version": dict(since_version=0),
+        "after": dict(after=at),
+        "replay": {},
+    }
+    got = {
+        name: log_reads(
+            lambda kw=kw: read_changes(
+                spark, job.log, 1, job.target_location, **kw
+            )
+        )
+        for name, kw in modes.items()
+    }
+    assert got == {name: ONE_SNAPSHOT for name in modes}

@@ -1,66 +1,35 @@
-"""Suggest the next round's DRIVER_PRIORITY.
+"""Report the driver-check vintage behind DRIVER_PRIORITY.
 
 The external correctness driver hash-checks the FIRST 50 exposed
-queries each round (see plans/registry.py).  This tool diffs every
+queries each round (see plans/registry.py, which derives DRIVER_PRIORITY
+from the CORRECTNESS_r*.json files with ``load_latest_green`` and
+``pick_priority``; both are re-exported here). This tool diffs every
 CORRECTNESS_r*.json against the live registry and prints, in
 registration order:
 
 - queries NEVER green-checked by the driver (the rotation candidates);
-- queries already green (safe to rotate out);
-- a ready-to-paste 50-name tuple preferring never-checked queries.
+- the vintage of the ones already green;
+- the 50-name window those files select.
 
 Usage:  python tools/rotate_priority.py [repo_root]
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-def load_latest_green(repo: str) -> dict[str, int]:
-    """name -> round of the LATEST green external check (hash match)."""
-    latest: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
-        with open(path) as fh:
-            data = json.load(fh)
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return latest
+from datalakeingestion_spark.plans.registry import (  # noqa: E402
+    load_latest_green,
+    pick_priority,
+)
 
-
-def pick_priority(
-    names: list[str],
-    latest: dict[str, int],
-    touched: tuple[str, ...] = (),
-) -> list[str]:
-    """The 50-name driver window: round-TOUCHED queries first (their
-    code paths changed — an external green on the final tree is worth
-    more than rotation coverage; ADVICE r12 item 3), then never-checked,
-    then stalest by (latest green round, registration order)."""
-    order = {n: i for i, n in enumerate(names)}
-    head = [n for n in names if n in set(touched)]
-    rest = [n for n in names if n not in set(head)]
-    never = [n for n in rest if n not in latest]
-    done = sorted(
-        (n for n in rest if n in latest),
-        key=lambda n: (latest[n], order[n]),
-    )
-    return (head + never + done)[:50]
+__all__ = ["load_latest_green", "pick_priority"]
 
 
 def main(repo: str) -> int:
-    sys.path.insert(0, repo)
     from datalakeingestion_spark.plans.registry import (
         REGISTRY,
         ROUND_TOUCHED,
@@ -91,17 +60,15 @@ def main(repo: str) -> int:
     for n in never:
         print(f"  {n}")
     pick = pick_priority(names, latest, ROUND_TOUCHED)
-    print("\n# suggested DRIVER_PRIORITY (paste into plans/registry.py):")
+    print("\n# DRIVER_PRIORITY (derived at import in plans/registry.py):")
     touched = set(ROUND_TOUCHED)
-    print("DRIVER_PRIORITY: tuple[str, ...] = (")
-    for n in pick:
+    for i, n in enumerate(pick):
         tag = (
             f"last green r{latest[n]}" if n in latest else "never checked"
         )
         if n in touched:
             tag = "ROUND-TOUCHED; " + tag
-        print(f'    "{n}",  # {tag}')
-    print(")")
+        print(f"  {i:2d} {n}  ({tag})")
     return 0
 
 
