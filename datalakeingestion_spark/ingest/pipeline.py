@@ -71,6 +71,7 @@ from .watermark import (
     committed_files,
     delta_commit_payload,
     files_payload,
+    norm_uri,
     open_batch,
     resolve_watermark,
 )
@@ -168,12 +169,19 @@ class _ParquetSink:
         writer.parquet(self.staging)
         target = self.job.target_location.rstrip("/")
         # listed paths are fully-qualified URIs (file:/..., s3a://...);
-        # splice the destination around the staging path inside them
+        # splice the destination around the staging path inside them,
+        # found with the scheme's slashes normalised (a target given as
+        # file:///x lists as file:/x). A staging dir with a scheme matches
+        # at 0; a bare path matches after the listed scheme and authority,
+        # which the destination keeps as listed.
+        staging = norm_uri(self.staging)
         for f in sorted(_list_files(self.spark, self.staging)):
-            i = f.find(self.staging)
+            nf = norm_uri(f)
+            i = nf.find(staging)
             if i < 0:  # pragma: no cover - FS returned an unrelated path
                 raise RuntimeError(f"staged file {f} outside {self.staging}")
-            self.moves.append((f, f[:i] + target + f[i + len(self.staging):]))
+            head = f[: i + len(f) - len(nf)] if i else ""
+            self.moves.append((f, head + target + nf[i + len(staging):]))
         self.files = sorted(dst for _, dst in self.moves)
         return files_payload(self.files)
 
@@ -425,6 +433,11 @@ class IncrementalIngestJob:
             )
 
     def run(self) -> IngestResult:
+        return self._run(None)
+
+    def _run(self, log_rows: list | None) -> IngestResult:
+        """:meth:`run`, given the id's log snapshot when the caller already
+        holds one (``None`` takes it here)."""
         if self.sink_format not in ("parquet", "delta"):
             raise ValueError(f"unsupported sink_format {self.sink_format!r}")
         if self.schema_registry is not None:
@@ -442,7 +455,8 @@ class IncrementalIngestJob:
             sink = _ParquetSink(self)
         # one log snapshot serves orphan cleanup AND watermark resolution
         # (cleanup only appends marker rows, never SUCCESS rows)
-        log_rows = self.log.id_rows(self.ingestion_id)
+        if log_rows is None:
+            log_rows = self.log.id_rows(self.ingestion_id)
         self._cleanup_orphans(log_rows)
         start = resolve_watermark(
             self.log, self.ingestion_id, self.integer_watermark, rows=log_rows
@@ -560,8 +574,11 @@ class IncrementalIngestJob:
 
         end = _parse(until)
         while True:
+            # one log snapshot per window: it resolves the window's start
+            # here and is handed to the window's run()
+            log_rows = self.log.id_rows(self.ingestion_id)
             start_s = resolve_watermark(
-                self.log, self.ingestion_id, self.integer_watermark
+                self.log, self.ingestion_id, self.integer_watermark, rows=log_rows
             )
             start = _parse(start_s)
             if start > end:
@@ -584,7 +601,7 @@ class IncrementalIngestJob:
             windowed = IncrementalIngestJob(
                 **{**self.__dict__, "end_value_cap": cap.strftime(fmt + ".%f")}
             )
-            res = windowed.run()
+            res = windowed._run(log_rows)
             results.append(res)
             if res.status == STATUS_NO_DATA:
                 # nothing in this window; advance past it by recording an

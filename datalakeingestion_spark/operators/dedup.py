@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hashing import portable_hash32, portable_hash60
+from ..functions.hashing import portable_hash32, portable_hash32_sql, portable_hash60
 from ..functions.text import distinct_shingles, tokens, word_shingles
 
 # MinHash parameters — shared with the SQL oracle generator (plans/llm.py).
@@ -95,10 +95,12 @@ def minhash_signatures(
 
 def _signatures_from_shingles(sh: DataFrame) -> DataFrame:
     """One groupBy(doc) computing all k mins simultaneously — the signature
-    costs a single shuffle regardless of k (no k-fold row explosion)."""
-    h = portable_hash32(F.col("s"))
+    costs a single shuffle regardless of k (no k-fold row explosion).
+    Each aggregate is one SQL expression: built from Column calls, every
+    literal and operator would be its own py4j round trip."""
+    h = portable_hash32_sql("s")
     aggs = [
-        F.min((F.lit(a) * h + F.lit(b)) % F.lit(MERSENNE_P)).alias(f"mh{i}")
+        F.expr(f"min(({a} * {h} + {b}) % {MERSENNE_P}) AS mh{i}")
         for i, (a, b) in enumerate(zip(MINHASH_A, MINHASH_B))
     ]
     return sh.groupBy("doc_id").agg(*aggs)
@@ -151,21 +153,13 @@ def lsh_candidate_pairs(
     first-band logic can't see that an earlier matching band was capped
     away (it would silently drop the pair), and the capped output is
     cost-bounded anyway, so the distinct shuffle is cheap there."""
-    sig_arr = sig.withColumn(
-        "all_sigs",
-        F.array(
-            *[
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"mh{j * LSH_ROWS + r}")
-                        for r in range(LSH_ROWS)
-                    ],
-                )
-                for j in range(LSH_BANDS)
-            ]
-        ),
+    band_sigs = ", ".join(
+        "concat_ws(',', "
+        + ", ".join(f"mh{j * LSH_ROWS + r}" for r in range(LSH_ROWS))
+        + ")"
+        for j in range(LSH_BANDS)
     )
+    sig_arr = sig.withColumn("all_sigs", F.expr(f"array({band_sigs})"))
     bands = sig_arr.select(
         "doc_id",
         F.posexplode("all_sigs").alias("band_id", "band_sig"),

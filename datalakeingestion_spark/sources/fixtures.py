@@ -2,10 +2,16 @@
 
 Replaces the reference's per-source readers for testing purposes: every
 operator in the engine is demonstrated over these tables (see TESTDATA.md).
-Plain ``spark.read.parquet`` — Catalyst handles column pruning and filter
-pushdown into the scan, which is the behavior the reference hand-codes in
-its SQL generation (reference: extractors/ingest_mysql_data.py:164-200,
-250-267).
+A ``spark.read.parquet`` with the file's schema pinned — Catalyst handles
+column pruning and filter pushdown into the scan, which is the behavior
+the reference hand-codes in its SQL generation (reference:
+extractors/ingest_mysql_data.py:164-200, 250-267).
+
+Schema inference is a Spark job (a footer read), and a query plan may load
+several tables, so each file's schema is inferred once and cached, keyed
+by the file's absolute path, size and mtime: a rewritten file is inferred
+again, and every other read passes the cached schema to ``.schema(...)``
+and launches no job.
 """
 
 from __future__ import annotations
@@ -14,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -50,14 +57,39 @@ def ntz_wall_clock_as_utc(col: str):
     )
 
 
+# (absolute path, st_size, st_mtime_ns) -> the schema Spark inferred for
+# that version of the file. Process-wide, since every plan calls
+# load_table with no state to keep it in; a key names one file version,
+# so an entry never goes stale. Two threads' first reads may both infer.
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> tuple[DataFrame, dict]:
+    """The file read with its cached schema, and its raw column dtypes.
+    The first read of each file version infers the schema."""
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local file (a Hadoop URI): nothing to key on
+        df = spark.read.parquet(path)
+        return df, dict(df.dtypes)
+    key = (os.path.abspath(path), st.st_size, st.st_mtime_ns)
+    schema = _SCHEMAS.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = _SCHEMAS[key] = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    return df, {f.name: f.dataType.simpleString() for f in schema}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"unknown fixture table {name!r}; expected one of {TABLES}")
     if name in _NANOS_TS_COLUMNS:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df, dtypes = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for col in _NANOS_TS_COLUMNS.get(name, ()):
-        dtype = dict(df.dtypes).get(col)
+        dtype = dtypes.get(col)
         if dtype == "bigint":
             df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
         elif dtype == "timestamp_ntz":
@@ -84,8 +116,8 @@ def load_events_pruned(
     import pandas as pd
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    dtype = dict(df.dtypes).get("ts")
+    df, dtypes = _read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
+    dtype = dtypes.get("ts")
     if dtype == "bigint":
         if lo is not None:
             df = df.filter(F.col("ts") >= F.lit(int(pd.Timestamp(lo).value)))

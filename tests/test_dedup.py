@@ -1369,3 +1369,111 @@ def test_resolve_increment_validates_inputs(spark):
             batch, golden_no_members, cw, "rec", "entity_id", ["blk"],
             fields, 10, "name",
         )
+
+
+# ---------------------------------------------------------------------------
+# The MinHash/LSH builders write their expressions as SQL text; each must
+# build the same plan as its Column-API form, kept here as the reference.
+# ---------------------------------------------------------------------------
+
+
+def _shingles(spark):
+    return spark.createDataFrame(
+        [(1, "a b c"), (1, "b c d"), (2, "b c d"), (3, "x y z")],
+        "doc_id long, s string",
+    )
+
+
+def test_portable_hash_sql_form_matches_column_form(spark):
+    from pyspark.sql import functions as F
+
+    from datalakeingestion_spark.functions.hashing import (
+        portable_hash32,
+        portable_hash32_sql,
+    )
+
+    sh = _shingles(spark)
+    ref = sh.select(
+        F.conv(F.substring(F.md5(F.col("s")), 1, 8), 16, 10).cast("long").alias("h")
+    )
+    assert sh.select(portable_hash32("s").alias("h")).sameSemantics(ref)
+    assert sh.select(F.expr(portable_hash32_sql("s")).alias("h")).sameSemantics(ref)
+
+
+def test_minhash_signature_builder_matches_column_api_plan(spark):
+    from pyspark.sql import functions as F
+
+    from datalakeingestion_spark.functions.hashing import portable_hash32
+
+    sh = _shingles(spark)
+    h = portable_hash32(F.col("s"))
+    ref = sh.groupBy("doc_id").agg(
+        *[
+            F.min((F.lit(a) * h + F.lit(b)) % F.lit(dd.MERSENNE_P)).alias(f"mh{i}")
+            for i, (a, b) in enumerate(zip(dd.MINHASH_A, dd.MINHASH_B))
+        ]
+    )
+    got = dd._signatures_from_shingles(sh)
+    assert got.schema == ref.schema
+    assert got.sameSemantics(ref)
+
+
+def _reference_lsh_candidate_pairs(sig, max_bucket):
+    """``lsh_candidate_pairs`` with ``all_sigs`` built from Column calls."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    sig_arr = sig.withColumn(
+        "all_sigs",
+        F.array(
+            *[
+                F.concat_ws(
+                    ",", *[F.col(f"mh{j * dd.LSH_ROWS + r}") for r in range(dd.LSH_ROWS)]
+                )
+                for j in range(dd.LSH_BANDS)
+            ]
+        ),
+    )
+    bands = sig_arr.select(
+        "doc_id", F.posexplode("all_sigs").alias("band_id", "band_sig"), "all_sigs"
+    )
+    same_band = (
+        (F.col("b1.band_id") == F.col("b2.band_id"))
+        & (F.col("b1.band_sig") == F.col("b2.band_sig"))
+        & (F.col("b1.doc_id") < F.col("b2.doc_id"))
+    )
+    pair = [F.col("b1.doc_id").alias("doc_id_a"), F.col("b2.doc_id").alias("doc_id_b")]
+    if max_bucket is not None:
+        capped = (
+            bands.withColumn(
+                "_bsz", F.count(F.lit(1)).over(Window.partitionBy("band_id", "band_sig"))
+            )
+            .filter(F.col("_bsz") <= max_bucket)
+            .select("doc_id", "band_id", "band_sig")
+        )
+        return (
+            capped.alias("b1").join(capped.alias("b2"), same_band).select(*pair).distinct()
+        )
+    no_earlier_match = F.forall(
+        F.slice(
+            F.zip_with(F.col("b1.all_sigs"), F.col("b2.all_sigs"), lambda x, y: x != y),
+            F.lit(1),
+            F.col("b1.band_id"),
+        ),
+        lambda differs: differs,
+    )
+    return (
+        bands.alias("b1")
+        .join(bands.alias("b2"), same_band)
+        .filter(no_earlier_match)
+        .select(*pair)
+    )
+
+
+@pytest.mark.parametrize("max_bucket", [None, 2])
+def test_lsh_candidate_pairs_builder_matches_column_api_plan(spark, max_bucket):
+    sig = dd._signatures_from_shingles(_shingles(spark))
+    got = dd.lsh_candidate_pairs(sig, max_bucket)
+    ref = _reference_lsh_candidate_pairs(sig, max_bucket)
+    assert got.sameSemantics(ref)
+    assert sorted(got.collect()) == sorted(ref.collect())

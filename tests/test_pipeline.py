@@ -459,6 +459,57 @@ def test_windowed_voluminous_mode(spark, events, tmp_path):
     assert spark.read.parquet(job.target_location).count() == ingested
 
 
+def test_run_windows_takes_one_log_snapshot_per_window(
+    spark, events, tmp_path, monkeypatch
+):
+    """Each window's watermark resolution and its run() share one
+    ``ExecutionLog.id_rows`` snapshot; the loop's last check takes one
+    more."""
+    snapshots = []
+    id_rows = ExecutionLog.id_rows
+
+    def counted_id_rows(self, ingestion_id):
+        snapshots.append(ingestion_id)
+        return id_rows(self, ingestion_id)
+
+    monkeypatch.setattr(ExecutionLog, "id_rows", counted_id_rows)
+    job = _job(spark, events, tmp_path)
+    results = job.run_windows("2024-01-30 23:59:59", window_hours=24 * 6)
+    assert len(results) == 5
+    assert all(r.status == STATUS_SUCCESS for r in results)
+    assert len(snapshots) <= len(results) + 1
+
+
+def test_file_uri_target_commits_and_reruns(spark, events, tmp_path):
+    """A target given as ``file:///x`` lists its staged files as
+    ``file:/x/...``; the staged commit must still place every file."""
+    import os
+
+    from datalakeingestion_spark.ingest.watermark import committed_files, norm_uri
+
+    lake = tmp_path / "lake" / "events"
+    job = _job(spark, events, tmp_path, target_location=f"file://{lake}",
+               end_value_cap=MID)
+    r1 = job.run()
+    assert r1.status == STATUS_SUCCESS
+    loaded = job.log.read().filter(F.col("execution_status") == STATUS_LOADED)
+    logged = committed_files(loaded.collect()[0]["reason_code"])
+    on_disk = sorted(
+        f"file:{os.path.join(d, n)}"
+        for d, dirs, names in os.walk(lake)
+        for n in names
+        if n.endswith(".parquet")
+    )
+    assert sorted(norm_uri(f) for f in logged) == on_disk
+    assert sorted(norm_uri(f) for f in r1.files) == on_disk
+    assert not any(n.startswith(".staging-") for n in os.listdir(lake))
+    assert spark.read.parquet(job.target_location).count() == r1.source_count
+
+    assert job.run().status == STATUS_NO_DATA
+    statuses = [r["execution_status"] for r in job.log.id_rows(1)]
+    assert statuses.count(STATUS_NO_DATA) == 1
+
+
 def test_windowed_mode_microsecond_until_ingests_tail(spark, events, tmp_path):
     """A sub-second `until` (e.g. now()) must not be truncated to the
     second when capping the final window: the old strftime('%S') cap fell
