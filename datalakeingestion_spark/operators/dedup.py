@@ -71,6 +71,12 @@ def _rebalance(df: DataFrame) -> DataFrame:
     (the 100 TB case), this is a no-op.
     """
     parallelism = df.sparkSession.sparkContext.defaultParallelism
+    # Runs during assembly: the choice needs the input's physical
+    # partition count, which exists only once the input is planned. On a
+    # file scan that is metadata and launches no job; on a derived frame
+    # under AQE, planning runs its shuffle and broadcast stages first
+    # (curation_pipeline's 3 eager jobs, when its persisted stage1 is
+    # not cached yet).
     if df.rdd.getNumPartitions() < parallelism:
         return df.repartition(parallelism)
     return df
@@ -132,7 +138,7 @@ def lsh_candidate_pairs(
     large is a mass-duplication flood, not a near-dup neighborhood —
     the standard LSH-at-scale guard (exact dedup upstream already
     collapses byte-identical floods, measured in
-    tools/scale_probe_r5.py; the cap covers the near-identical
+    tools/scale_probe_r5.py @ bb3b052; the cap covers the near-identical
     residue). ``None`` (default) keeps the exhaustive behavior the
     oracles replicate — capped calls trade recall inside flooded
     buckets for a hard cost bound, so the cap is an explicit operator
@@ -576,7 +582,7 @@ def build_substring_index(
     it also shrinks the table by the corpus' gram repetition factor),
     appended per batch, and every probe's semi-join lands on the
     bucket key so the lake side never exchanges again (plan-pinned in
-    tests/test_dedup.py; measured in tools/scale_probe_r9.py).
+    tests/test_dedup.py; measured in tools/scale_probe_r9.py @ 7106773).
 
     Grams are stored as TEXT (collision-free, oracle-exact — same
     decision as the inline form); a 100 TB deployment would store a
@@ -1666,7 +1672,7 @@ def _prune_and_cap_old_bands(
     window-count only within the probed buckets. Without the prune the
     cap window counts every lake bucket, re-introducing an O(lake)
     per-batch term (measured 3x the uncapped probe at a 200k-doc lake,
-    tools/scale_probe_r7.py)."""
+    tools/scale_probe_r7.py @ c5f0fcc)."""
     probe_sigs = bands_new.select("band_id", "band_sig").distinct()
     hit = bands_old.join(
         F.broadcast(probe_sigs), ["band_id", "band_sig"], "leftsemi"
@@ -1750,7 +1756,8 @@ def dedup_against_index(
     # verify over the union shingle table, SEMI-PRUNED to candidate docs
     # first: without the prune, the verify joins shuffle the whole lake
     # shingle table per batch — the one O(lake) term in the per-batch
-    # path (measured: tools/scale_probe_r6.py::probe_incremental_dedup).
+    # path (measured: probe_incremental_dedup in
+    # tools/scale_probe_r6.py @ c2bc8cd).
     # The candidate-id frame is ≤ 2×candidates rows, broadcastable. The
     # residual O(lake) SCAN feeding the semi join disappears in
     # production by storing the doc→shingle table bucketed by doc_id
@@ -1885,8 +1892,9 @@ def dedup_against_stored_index(
     bucket keys — so the stored tables satisfy the joins' clustered
     distribution straight off their file scans. Only the batch-derived
     frames shuffle; the measured lake-coupled term of the inline form
-    (tools/scale_probe_r6.py::probe_incremental_dedup) is gone from the
-    shuffle graph. Ids must be disjoint from the indexed side, as in
+    (probe_incremental_dedup in tools/scale_probe_r6.py @ c2bc8cd) is
+    gone from the shuffle graph. Ids must be disjoint from the indexed
+    side, as in
     `dedup_against_index`.
 
     ``max_bucket`` is the flood cap, as in ``dedup_against_index``: band

@@ -111,7 +111,7 @@ def _prepare_blocks(
     # what makes blocking work at all), and a window over the records
     # feeds the downstream self-join a sorted/windowed subtree that
     # measured 5.5x slower end-to-end at the 8k-flood probe
-    # (tools/scale_probe_r9.py) than this scan-shaped form.
+    # (tools/scale_probe_r9.py @ 7106773) than this scan-shaped form.
     sizes = df.groupBy(*block_cols).agg(F.count(F.lit(1)).alias("_bsz"))
     if null_blocks == "match":
         # NULL block keys are legal groups under "match": the sizes join
@@ -256,7 +256,7 @@ def _candidate_pairs(
     # never produce chain pairs at all). A distinct here would shuffle
     # every candidate pair with both payloads a second time — measured
     # 3x the whole unbounded path's cost at the 8k-record flood probe
-    # (tools/scale_probe_r9.py) before it was removed.
+    # (tools/scale_probe_r9.py @ 7106773) before it was removed.
     return pairs.unionByName(chain_full)
 
 

@@ -11,7 +11,7 @@ one executor and one shuffle of everything).
 
 The scale shape is the classic two-pass parallel prefix sum
 (``keyed_prefix_sum``, JVM end-to-end — the earlier Arrow/mapInPandas
-form measured 2.3× slower at 20M rows, tools/scale_probe_r6.py):
+form measured 2.3× slower at 20M rows, tools/scale_probe_r6.py @ c2bc8cd):
 
 1. range-partition by (key, order): ``spark_partition_id()`` becomes a
    deterministic bucket id respecting the global order — ONE shuffle;
@@ -66,7 +66,7 @@ def pack_sequences(
     one shared two-pass JVM implementation (range-shuffle bucketing,
     per-bucket window, broadcast offsets) instead of a parallel Arrow
     code path (the Arrow form measured 2.3× slower at 20M rows,
-    tools/scale_probe_r6.py).
+    tools/scale_probe_r6.py @ c2bc8cd).
     """
     if token_budget <= 0:
         raise ValueError("token_budget must be positive")
@@ -538,7 +538,7 @@ def keyed_prefix_sum(
 
     Same two-pass idea as ``pack_sequences``, but JVM end-to-end (no
     Arrow/Python pass — measured 2.3× slower than this form at 20M rows,
-    tools/scale_probe_r6.py):
+    tools/scale_probe_r6.py @ c2bc8cd):
 
     1. range-shuffle on (key, order): ``spark_partition_id()`` becomes a
        deterministic BUCKET id that respects the global order, so each

@@ -30,26 +30,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _dot_fold(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot product (JVM higher-order functions).
-
-    Deterministic element order, but interpreted PER ELEMENT — fine for
-    small candidate sets, ~50× slower than the vectorized form on
-    millions of pairs."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 _DOT_PD = None
 
 
 def _dot(a: Column, b: Column) -> Column:
     """Vectorized pairwise dot product: one numpy einsum per Arrow batch.
 
-    Summation order differs from the sequential fold by ~1 ulp — all
+    Summation order differs from a sequential fold by ~1 ulp — all
     cosine consumers round to 6 dp BEFORE ranking/compare, so results are
     unaffected; this is the hot path for all-pairs scoring. The UDF is
     built lazily: pandas_udf parses its DDL against the active session,
@@ -143,7 +130,12 @@ def _collect_query_rows(queries: DataFrame, id_col: str, vec_col: str):
     (caller falls back to the join formulation). Rows with a NULL id or
     NULL vector are dropped — the NULL-id drop replicates the former
     join condition, the NULL-vec drop is the explicit contract both
-    formulations now share (a NULL vector can never score)."""
+    formulations now share (a NULL vector can never score).
+
+    Eager by design: it runs one Spark job while the caller's plan is
+    still being assembled, because the rows are closed over by the
+    scoring kernel (that plan cannot be built before they are on the
+    driver) and their count picks the formulation."""
     rows = (
         queries.select(F.col(id_col), F.col(vec_col))
         .limit(MAX_COLLECT_QUERIES + 1)
@@ -349,20 +341,6 @@ def hyperplanes(n_planes: int, dim: int, seed: int = 0) -> list[list[float]]:
             row.append(h / float(1 << 31) - 1.0)
         planes.append(row)
     return planes
-
-
-def _bucket_expr(vec: Column, planes: list[list[float]]) -> Column:
-    """Pack sign(plane·vec) bits into an integer bucket id."""
-    bucket = F.lit(0)
-    for i, plane in enumerate(planes):
-        lit_plane = F.array(*[F.lit(v) for v in plane])
-        proj = F.aggregate(
-            F.zip_with(vec, lit_plane, lambda x, w: x.cast("double") * w),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0))
-    return bucket
 
 
 def _lsh_bucketed_topk_join(

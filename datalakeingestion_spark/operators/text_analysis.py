@@ -30,22 +30,6 @@ STOPWORDS = {
 LANGS = ["en", "de", "fr", "es"]
 
 
-def quality_expr_map(text_col: str = "text") -> dict[str, Column]:
-    """The core quality expressions as plain Columns, so composed
-    pipelines (operators/curation.py) can evaluate them INLINE on a
-    frame instead of joining a projected twin back by id."""
-    toks = tokens(text_col)
-    n = F.size(toks)
-    nd = F.size(F.array_distinct(toks))
-    return {
-        "n_tokens": n,
-        "ttr": F.round(nd / n, 6),
-        "quality_score": F.round(
-            (nd / n) * F.least(F.lit(1.0), n / F.lit(50.0)), 6
-        ),
-    }
-
-
 def quality_metrics(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Per-doc quality features + a composite score.
 
@@ -94,21 +78,6 @@ def quality_metrics(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _lang_hit_map(text_col: str) -> dict[str, Column]:
-    toks = tokens(text_col)
-
-    def _contains(lst):
-        # closure factory: a default-arg lambda would look like a 2-arg
-        # (element, index) lambda to F.filter
-        return lambda t: F.array_contains(lst, t)
-
-    hit_cols = {}
-    for lang in LANGS:
-        lst = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-        hit_cols[lang] = F.size(F.filter(toks, _contains(lst)))
-    return hit_cols
-
-
 def _lang_pred_cascade(hits: dict[str, Column]) -> Column:
     """Deterministic argmax over the hit expressions (precedence = LANGS
     order; all-zero → 'unknown'). Built back-to-front so earlier langs
@@ -123,12 +92,6 @@ def _lang_pred_cascade(hits: dict[str, Column]) -> Column:
                 cond = cond & (hits[lang] >= hits[other])
         pred = F.when(cond, F.lit(lang)).otherwise(pred)
     return pred
-
-
-def language_pred(text_col: str = "text") -> Column:
-    """The predicted-language cascade as one inline Column (for composed
-    pipelines that must not join a projected twin back by id)."""
-    return _lang_pred_cascade(_lang_hit_map(text_col))
 
 
 def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:

@@ -165,7 +165,7 @@ def ks_drift_time_sliced(spark: SparkSession, sf_dir: str) -> DataFrame:
     "form collapses to three tasks each sorting and holding a third of "
     "the table. The Spark side runs the per-(flag, price) histogram "
     "through keyed_prefix_sum (range-bucketed two-pass JVM prefix sum, "
-    "tools/scale_probe_r6.py) and divides by broadcast per-flag "
+    "tools/scale_probe_r6.py @ c2bc8cd) and divides by broadcast per-flag "
     "totals; the window-form oracle states the semantics.",
 )
 def price_percentile_rank(spark: SparkSession, sf_dir: str) -> DataFrame:

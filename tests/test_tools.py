@@ -1,10 +1,13 @@
-"""Round tooling (tools/rotate_priority.py)."""
+"""Repository tooling: tools/rotate_priority.py, tools/profile_registry.py,
+and what tools/ may hold."""
 
 from __future__ import annotations
 
 import pytest
 
 import json
+import re
+import subprocess
 import sys
 
 
@@ -68,3 +71,95 @@ def test_registry_priority_is_exactly_the_recomputed_stalest_50():
     # silently shrinks the force-included head)
     missing = [n for n in ROUND_TOUCHED if n not in REGISTRY]
     assert missing == []
+
+
+PROFILE_FIELDS = (
+    "query", "assembly_s", "action_s", "py4j_calls", "eager_jobs",
+    "schema_jobs", "jobs", "stages", "tasks", "input_bytes",
+    "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes",
+    "status_tracker_jobs", "plan_bytes", "cached_frames_left",
+    # the physical-plan node counts
+    "Exchange", "BroadcastExchange", "SortMergeJoin", "ShuffledHashJoin",
+    "BroadcastHashJoin", "BroadcastNestedLoopJoin", "CartesianProduct",
+    "BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+    "FlatMapGroupsInPandas", "Window", "Generate", "InMemoryTableScan",
+    "error",
+)
+
+
+@pytest.fixture(scope="module")
+def profile_rows():
+    """Two queries through the registry profiler, in its own process."""
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO, "tools", "profile_registry.py"),
+            "q4_order_priority_exists",
+            "training_shard_manifest",
+        ],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    # stdout holds the JSON document and nothing else
+    doc = json.loads(proc.stdout)
+    assert doc["scale"] == "sf0.01"
+    return doc["rows"]
+
+
+def test_profile_registry_rows_carry_every_field(profile_rows):
+    assert [r["query"] for r in profile_rows] == [
+        "q4_order_priority_exists",
+        "training_shard_manifest",
+    ]
+    for row in profile_rows:
+        assert set(row) == set(PROFILE_FIELDS), row["query"]
+        assert row["error"] is None, row
+        assert row["assembly_s"] > 0 and row["action_s"] > 0
+        assert row["py4j_calls"] > 0 and row["plan_bytes"] > 0
+        # the action scans the fixtures
+        assert row["input_bytes"] > 0
+
+
+def test_profile_registry_attributes_eager_jobs(profile_rows):
+    rows = {r["query"]: r for r in profile_rows}
+    # a lazily built plan: no job before the action
+    assert rows["q4_order_priority_exists"]["eager_jobs"] == 0
+    # keyed_prefix_sum checkpoints and collects its subtotals in fn()
+    assert rows["training_shard_manifest"]["eager_jobs"] >= 1
+    # q4 is the first to read orders and lineitem in the fresh session;
+    # their schema jobs are counted apart from the eager ones
+    assert rows["q4_order_priority_exists"]["schema_jobs"] >= 1
+
+
+def test_profile_registry_event_log_agrees_with_status_tracker(profile_rows):
+    for row in profile_rows:
+        assert row["jobs"] == row["status_tracker_jobs"], row
+        assert row["jobs"] >= row["eager_jobs"] + row["schema_jobs"] + 1
+
+
+# a tools/<name>.py citation, optionally pinned to the commit that holds it
+_TOOL_CITATION = re.compile(r"(?<![\w/])tools/(\w+)\.py(\s*@\s*[0-9a-f]{7,40}\b)?")
+
+
+@pytest.mark.smoke
+def test_tools_hold_no_probe_scripts_and_citations_resolve():
+    """Stale evidence cannot grow back: no probe script in tools/, and a
+    cited tools/ script either exists or names the commit that holds it."""
+    tools = os.path.join(REPO, "tools")
+    assert [f for f in os.listdir(tools) if "probe" in f] == []
+    docs = [os.path.join(REPO, f) for f in ("COVERAGE.md", "SCALE.md")]
+    for base, _, files in os.walk(os.path.join(REPO, "datalakeingestion_spark")):
+        docs += [os.path.join(base, f) for f in files if f.endswith(".py")]
+    stale = []
+    for path in docs:
+        with open(path, encoding="utf-8") as fh:
+            text = fh.read()
+        for m in _TOOL_CITATION.finditer(text):
+            if m.group(2) is None and not os.path.isfile(
+                os.path.join(tools, m.group(1) + ".py")
+            ):
+                stale.append(f"{os.path.relpath(path, REPO)}: {m.group(0)}")
+    assert stale == []
