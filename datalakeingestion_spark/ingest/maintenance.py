@@ -15,22 +15,29 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from .merge import _fs
+from ..utils import driver_frame
+from .merge import _fs, _walk
 from .watermark import commits, committed_files, files_payload, norm_uri
+
+_LAYOUT_SCHEMA = T.StructType(
+    [T.StructField("partition", T.StringType())]
+    + [
+        T.StructField(name, T.LongType())
+        for name in (
+            "n_files", "total_bytes", "min_bytes", "max_bytes", "n_small_files"
+        )
+    ]
+)
 
 
 def count_data_files(spark: SparkSession, path: str) -> int:
-    jvm, fs, p = _fs(spark, path)
+    _, fs, p = _fs(spark, path)
     if not fs.exists(p):
         return 0
-    n = 0
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        f = it.next().getPath().getName()
-        if not f.startswith("_") and not f.startswith("."):
-            n += 1
-    return n
+    names = (st.getPath().getName() for st in _walk(fs, p))
+    return sum(1 for f in names if not f.startswith(("_", ".")))
 
 
 def compact(
@@ -163,7 +170,7 @@ def vacuum(
         vacuum_delta(spark, path, retention_hours=retention_seconds / 3600)
         return []
 
-    jvm, fs, p = _fs(spark, path)
+    _, fs, p = _fs(spark, path)
     if not fs.exists(p):
         return []
     referenced = {
@@ -176,9 +183,7 @@ def vacuum(
         retention_seconds * 1000
     )
     deleted: list[str] = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
+    for st in _walk(fs, p):
         fp = st.getPath()
         name = fp.getName()
         if name.startswith("_") or name.startswith("."):
@@ -218,13 +223,11 @@ def layout_report(
     """
     import os
 
-    jvm, fs, p = _fs(spark, path)
+    _, fs, p = _fs(spark, path)
     rows: dict[str, list[int]] = {}
     if fs.exists(p):
         base = p.toUri().getPath()
-        it = fs.listFiles(p, True)
-        while it.hasNext():
-            f = it.next()
+        for f in _walk(fs, p):
             name = f.getPath().getName()
             if name.startswith("_") or name.startswith("."):
                 continue
@@ -243,8 +246,4 @@ def layout_report(
         )
         for part, sizes in sorted(rows.items())
     ]
-    return spark.createDataFrame(
-        data,
-        "partition string, n_files long, total_bytes long, "
-        "min_bytes long, max_bytes long, n_small_files long",
-    )
+    return driver_frame(spark, data, _LAYOUT_SCHEMA)

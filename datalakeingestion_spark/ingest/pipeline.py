@@ -10,9 +10,18 @@ Spark-first design:
 - the delta filter is a plan predicate (pushed into parquet/JDBC scans by
   Catalyst) instead of generated SQL text;
 - chunking disappears (partitions + AQE replace the 400k/100k-row loops);
-- bounds + count are captured in ONE aggregate over the delta frame
-  (the reference folds per-chunk min/max lists — ingest_mysql_data.py:
-  273-289 — which is exactly Spark's partial aggregation, automatic);
+- bounds + count are observed DURING the batch's one write
+  (``df.observe``), so the source is scanned once per batch, as the
+  reference computes them during its one chunked pull (it folds
+  per-chunk min/max lists — ingest_mysql_data.py:273-289 — which is
+  exactly Spark's partial aggregation, automatic). A ``limit(1)``
+  probe, which stops at the first row, decides NO_DATA before the
+  write. Coalesce watermarks, whose end_value is least(per-column
+  maxes), keep one aggregate before a capped write;
+- the run's metadata work stays off Spark: the log is read on the
+  driver, the staged files are listed with one ``listStatus`` per
+  directory, and the lake reads the pipeline makes pin the schema it
+  already holds;
 - the written-file list is captured for rollback on validation failure
   (reference T5 manual rollback, ingest_mysql_data.py:569-581). On a real
   deployment Delta Lake's atomic commit replaces this entirely; the
@@ -20,10 +29,10 @@ Spark-first design:
   semantics.
 
 One orchestration (:meth:`IncrementalIngestJob.run`) drives both lake
-sinks — watermark, STARTED row, bounds, the two-scan cap, LOADED row,
-validation, SUCCESS/VALIDATION_FAILURE row, latest zone. Only these steps
-differ between ``sink_format="parquet"`` (:class:`_ParquetSink`) and
-``sink_format="delta"`` (:class:`_DeltaSink`):
+sinks — watermark, STARTED row, the probe (NO_DATA when it finds no
+row), the observed write, LOADED row, validation, SUCCESS/VALIDATION_FAILURE row,
+latest zone. Only these steps differ between ``sink_format="parquet"``
+(:class:`_ParquetSink`) and ``sink_format="delta"`` (:class:`_DeltaSink`):
 
 ===================  ===============================  ==============================
 step                 parquet                          delta
@@ -31,7 +40,7 @@ step                 parquet                          delta
 STARTED payload      the run's staging dir            "delta-sink"
 write, then publish  stage, list; LOADED = the file   record pre, append; LOADED =
                      list; move files, drop staging   {"delta_commit": post}; no-op
-validation read      spark.read.parquet               delta_sink.read_delta
+validation read      schema-pinned spark.read         delta_sink.read_delta
 rollback (reason)    delete the listed files          RESTORE pre, or drop the new
                      (count-mismatch-rolled-back)     table (count-mismatch-restored)
 orphan recovery      delete listed files + staging    RESTORE/drop the orphaned commit
@@ -51,13 +60,14 @@ from __future__ import annotations
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config.partition_spec import PartitionSpec
 from ..operators.relational import coalesce_range_filter
 from . import delta_sink as dsink
-from .merge import _fs
+from .merge import _fs, _walk
 from .schema_registry import SchemaRegistry
 from .watermark import (
     STATUS_FAILED,
@@ -93,20 +103,17 @@ def _list_files(spark: SparkSession, path: str) -> set[str]:
     _, fs, fs_path = _fs(spark, path)
     if not fs.exists(fs_path):
         return set()
-    files: set[str] = set()
-    it = fs.listFiles(fs_path, True)
-    while it.hasNext():
-        status = it.next()
-        name = status.getPath().toString()
-        if not name.endswith("_SUCCESS"):
-            files.add(name)
-    return files
+    names = (st.getPath().toString() for st in _walk(fs, fs_path))
+    return {name for name in names if not name.endswith("_SUCCESS")}
 
 
 def _delete_files(spark: SparkSession, files: set[str]) -> None:
+    if not files:
+        return
+    jvm, fs, _ = _fs(spark, next(iter(files)))
+    hpath = jvm.org.apache.hadoop.fs.Path
     for f in files:
-        _, fs, p = _fs(spark, f)
-        fs.delete(p, False)
+        fs.delete(hpath(f), False)
 
 
 def _delete_dir(spark: SparkSession, path: str) -> None:
@@ -115,15 +122,25 @@ def _delete_dir(spark: SparkSession, path: str) -> None:
 
 
 def _move_files(spark: SparkSession, moves: list[tuple[str, str]]) -> None:
-    """Per-file rename (same filesystem). Parent dirs are created; an
-    already-present destination means a retry already moved it — skip."""
+    """Per-file rename (same filesystem, resolved once per batch). A
+    missing parent directory is created, and its files are new; in a
+    parent that exists, an already-present destination means a retry
+    already moved it — skip."""
+    if not moves:
+        return
+    jvm, fs, _ = _fs(spark, moves[0][0])
+    hpath = jvm.org.apache.hadoop.fs.Path
+    parents: dict[str, bool] = {}  # parent dir -> existed before this batch
     for src, dst in moves:
-        jvm, fs, sp = _fs(spark, src)
-        dp = jvm.org.apache.hadoop.fs.Path(dst)
-        if fs.exists(dp):
+        dp = hpath(dst)
+        parent = dst.rsplit("/", 1)[0]
+        if parent not in parents:
+            parents[parent] = fs.exists(dp.getParent())
+            if not parents[parent]:
+                fs.mkdirs(dp.getParent())
+        if parents[parent] and fs.exists(dp):
             continue
-        fs.mkdirs(dp.getParent())
-        fs.rename(sp, dp)
+        fs.rename(hpath(src), dp)
 
 
 def read_lake(spark: SparkSession, target_location: str) -> DataFrame:
@@ -161,8 +178,16 @@ class _ParquetSink:
         self.started_payload = self.staging
         self.moves: list[tuple[str, str]] = []
         self.files: list[str] = []
+        # the lake's schema and partition column, once written
+        self.schema: T.StructType | None = None
+        self.partition_col: str | None = None
 
     def write(self, delta: DataFrame, partition_col: str | None) -> str:
+        # files read back as nullable, without the source's field metadata
+        self.schema = T.StructType(
+            [T.StructField(f.name, f.dataType) for f in delta.schema.fields]
+        )
+        self.partition_col = partition_col
         writer = delta.write.mode("append").option("compression", "snappy")
         if partition_col is not None:
             writer = writer.partitionBy(partition_col)
@@ -185,12 +210,22 @@ class _ParquetSink:
         self.files = sorted(dst for _, dst in self.moves)
         return files_payload(self.files)
 
+    def discard(self) -> None:
+        """Drop an empty batch's staging dir (a source that emptied
+        between the probe and the write)."""
+        _delete_dir(self.spark, self.staging)
+
     def publish(self) -> None:
         _move_files(self.spark, self.moves)
         _delete_dir(self.spark, self.staging)
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.job.target_location)
+        """The whole lake, read with the schema the batch was written
+        with (no footer-inference job). Older batches may lack a newer
+        column, which then reads as null, as under mergeSchema."""
+        return self.spark.read.schema(self.schema).parquet(
+            self.job.target_location
+        )
 
     def rollback(self) -> str:
         _delete_files(self.spark, set(self.files))
@@ -202,7 +237,13 @@ class _ParquetSink:
         read matches the pre-partition schema merge_latest expects."""
         from .merge import merge_latest
 
-        return self.spark.read.parquet(*self.files), merge_latest
+        file_schema = T.StructType(
+            [f for f in self.schema.fields if f.name != self.partition_col]
+        )
+        return (
+            self.spark.read.schema(file_schema).parquet(*self.files),
+            merge_latest,
+        )
 
     def recover(self, started, loaded) -> str | None:
         """Crash recovery for an open staged batch (reference T5 analog):
@@ -253,6 +294,11 @@ class _DeltaSink:
         dsink.append_delta(delta, self.target, partition_col)
         self.post = dsink.table_version(self.spark, self.target)
         return delta_commit_payload(self.post)
+
+    def discard(self) -> None:
+        """Nothing to drop: the probe or the coalesce bounds found no row,
+        so nothing was appended (a source that emptied between the probe
+        and the append leaves a commit without data)."""
 
     def publish(self) -> None:
         """The append already committed atomically."""
@@ -359,7 +405,10 @@ class IncrementalIngestJob:
         return self.source.filter(pred)
 
     def _bounds(self, delta: DataFrame) -> tuple[str, str, int]:
-        """(min, max, count) of the delta column in ONE aggregate.
+        """(min, max, count) of the delta column in ONE aggregate — the
+        bounds pass of coalesce watermarks, whose writes cannot observe
+        them (single-column runs observe the same values during the
+        write, see :meth:`_write_observed`).
 
         Coalesce case: end_value = least of the per-column maxes — the
         reference's deliberate conservative watermark
@@ -376,6 +425,44 @@ class IncrementalIngestJob:
             max_expr.alias("mx"),
             F.count(F.lit(1)).alias("n"),
         ).first()
+        return self._format_bounds(row)
+
+    def _write_observed(
+        self,
+        sink: _ParquetSink | _DeltaSink,
+        delta: DataFrame,
+        partition_col: str | None,
+    ) -> tuple[str, tuple[str, str, int]]:
+        """Write the batch in ONE scan of the source and take its (min,
+        max, count) from an :class:`Observation` on that same scan. The
+        LOADED row then records exactly the rows the commit holds: a
+        live source (JDBC) that commits rows after the scan leaves them
+        to the next watermark window, with no cap filter and no second
+        scan. (The reference likewise computes its bounds during its one
+        chunked pull — ingest_mysql_data.py:273-289.)
+
+        A ``limit(1)`` probe (``isEmpty``) decides NO_DATA first: an
+        empty Delta append would still commit a table version, and an
+        empty parquet write (committer, staging dir, listing) costs more
+        than a bounds aggregate, while the probe costs less. It reads the
+        source's partitions in rounds until it meets a row, so a batch
+        with rows pays one small job."""
+        if delta.isEmpty():
+            return "", ("", "", 0)
+        obs = Observation()
+        col = self._delta_col()
+        observed = delta.observe(
+            obs,
+            F.min(col).alias("mn"),
+            F.max(col).alias("mx"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        payload = sink.write(observed, partition_col)
+        return payload, self._format_bounds(obs.get)
+
+    def _format_bounds(self, row) -> tuple[str, str, int]:
+        """The (start_value, end_value, source_count) strings a log row
+        records for an aggregate row of ``mn``/``mx``/``n``."""
         if row["n"] == 0:
             return "", "", 0
         if self.integer_watermark:
@@ -474,33 +561,29 @@ class IncrementalIngestJob:
             delta = self.partition_spec.derive(delta)
             partition_col = self.partition_spec.partition_column_name
 
-        mn, mx, n = self._bounds(delta)
-        if n:
-            # The bounds pass and the write below are SEPARATE scans of the
-            # source. Against a live source (JDBC), rows committed in
-            # between with delta > mx would be written now yet the
-            # watermark only advances to mx — the next run re-pulls them
-            # as duplicates into the append-only lake. Cap the write at
-            # the observed mx so this batch is exactly the rows the
-            # bounds/validation saw; later rows belong to the next
-            # watermark window. (The reference's single chunked pull
-            # computes bounds DURING its one scan — this is the two-scan
-            # design's closing of that same contract.)
-            delta = delta.filter(self._delta_col() <= self._wm_lit(mx))
-            if self.delta_expr_cols:
-                # mx is least(per-column maxes), so rows whose coalesce
-                # delta lies in (mx, cap] were counted by _bounds but are
-                # excluded from this write — recount on the capped frame
-                # so the LOADED row's source_count matches what the commit
-                # holds (the excluded rows belong to the next window).
-                # Validation is skipped in coalesce mode, so nothing
-                # downstream would otherwise catch the overstatement.
+        if self.delta_expr_cols:
+            mn, mx, n = self._bounds(delta)
+            if n:
+                # A coalesce watermark's end_value is least(per-column
+                # maxes), which an Observation cannot apply before the
+                # write. So its bounds pass and its write are SEPARATE
+                # scans, and the write is capped at mx: rows a live source
+                # (JDBC) commits in between with delta > mx, and rows
+                # whose coalesce delta lies in (mx, cap], belong to the
+                # next watermark window. The recount on the capped frame
+                # makes the LOADED row's source_count match what the
+                # commit holds (validation is skipped in coalesce mode,
+                # so nothing downstream would catch an overstatement).
+                delta = delta.filter(self._delta_col() <= self._wm_lit(mx))
                 n = delta.count()
+            payload = sink.write(delta, partition_col) if n else ""
+        else:
+            payload, (mn, mx, n) = self._write_observed(sink, delta, partition_col)
         if n == 0:
+            sink.discard()
             self.log.append(self.ingestion_id, STATUS_NO_DATA, start_value=start)
             return IngestResult(STATUS_NO_DATA, start)
 
-        payload = sink.write(delta, partition_col)
         self.log.append(
             self.ingestion_id,
             STATUS_LOADED,

@@ -38,7 +38,9 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..utils import driver_frame
 from .merge import _fs
 from .watermark import (
     SCHEME_SLASHES,
@@ -49,10 +51,23 @@ from .watermark import (
     norm_uri,
 )
 
-_HISTORY_SCHEMA = (
-    "version int, committed_at timestamp, start_value string, "
-    "end_value string, source_count bigint, num_files int, files string, "
-    "baseline boolean"
+_HISTORY_SCHEMA = T.StructType(
+    [
+        T.StructField("version", T.IntegerType()),
+        T.StructField("committed_at", T.TimestampType()),
+        T.StructField("start_value", T.StringType()),
+        T.StructField("end_value", T.StringType()),
+        T.StructField("source_count", T.LongType()),
+        T.StructField("num_files", T.IntegerType()),
+        T.StructField("files", T.StringType()),
+        T.StructField("baseline", T.BooleanType()),
+    ]
+)
+_FILE_VERSION_SCHEMA = T.StructType(
+    [
+        T.StructField("_file", T.StringType()),
+        T.StructField("_commit_version", T.LongType()),
+    ]
 )
 
 
@@ -61,8 +76,8 @@ def history(log: ExecutionLog, ingestion_id: int) -> DataFrame:
     :func:`~.watermark.commits` (which states the pairing rule and the
     columns) over one :meth:`ExecutionLog.id_rows` snapshot, as a
     DataFrame."""
-    return log.spark.createDataFrame(
-        commits(log.id_rows(ingestion_id)), _HISTORY_SCHEMA
+    return driver_frame(
+        log.spark, commits(log.id_rows(ingestion_id)), _HISTORY_SCHEMA
     )
 
 
@@ -323,9 +338,8 @@ def read_changes(
             f"(first: {missing[0]}); a compaction has rewritten history — "
             "re-baseline the consumer from a current snapshot"
         )
-    mapping = spark.createDataFrame(
-        [(f, v) for f, v in file_version.items()],
-        "_file string, _commit_version long",
+    mapping = driver_frame(
+        spark, list(file_version.items()), _FILE_VERSION_SCHEMA
     )
     data = spark.read.option("basePath", base_path).parquet(
         *file_version.keys()

@@ -3,8 +3,8 @@
 The reference keeps per-run state as CSV "execution log" files on S3 under
 date-partitioned prefixes, found again via a today→month→previous-month→
 all-time fallback scan (utils/common_utils.py:292-401). Here state is ONE
-append-only parquet table; watermark resolution is a single filtered
-aggregate — no prefix cascade (SURVEY.md §2.10 T4).
+append-only parquet table; watermark resolution is one pass over the
+id's rows, read on the driver — no prefix cascade (SURVEY.md §2.10 T4).
 
 Semantics replicated exactly from the reference (T1,
 extractors/ingest_mysql_data.py:73-149):
@@ -31,9 +31,9 @@ import uuid
 from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..utils import driver_frame, read_driver_parquet, write_driver_parquet
 from .merge import _fs
 
 # 8 columns per the reference (config/basic_config.py:54-57).
@@ -224,8 +224,12 @@ class ExecutionLog:
     (the runner ingests tables in parallel threads — and possibly parallel
     processes) would otherwise race on the shared parquet `_temporary`
     committer directory. Distinct directories need no locking at all;
-    reads recurse over all batches. A Delta table's ACID append replaces
-    this on a production deployment.
+    reads recurse over all batches. Both directions run on the driver
+    with no Spark job: :meth:`_write_batch` writes a batch file through
+    pyarrow and the Hadoop FS API, and :meth:`id_rows`, the pipeline's
+    one reader, reads the files back the same way. :meth:`read` stays a
+    (Spark) DataFrame for consumers that query the log. A Delta table's
+    ACID append replaces this on a production deployment.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -243,7 +247,7 @@ class ExecutionLog:
         source as duplicates. The reference likewise propagates log-read
         errors (utils/common_utils.py:292-401 has no blanket except)."""
         if not self._exists():
-            return self.spark.createDataFrame([], LOG_SCHEMA)
+            return driver_frame(self.spark, [], LOG_SCHEMA)
         return (
             self.spark.read.schema(LOG_SCHEMA)
             .option("recursiveFileLookup", "true")
@@ -267,16 +271,15 @@ class ExecutionLog:
         atomic on local/HDFS; on S3A it is copy+delete, the same
         weakness the default parquet committer had here).
 
-        Layout is unchanged: one fresh ``batch-<uuid>`` directory per
-        append, one snappy parquet file inside, schema == LOG_SCHEMA —
-        concurrent writers still need no locking, and readers
-        (``read()``'s recursive schema-pinned scan) are untouched.
-        The serialize/copy/rename mechanics live in
-        ``utils.write_driver_parquet``.
+        Layout: one fresh ``batch-<uuid>`` directory per append, one
+        snappy parquet file inside, schema == LOG_SCHEMA — concurrent
+        writers need no locking, and both readers, ``read()``'s recursive
+        schema-pinned scan and :meth:`id_rows`' driver-side read, skip
+        the in-flight name. The serialize/copy/rename mechanics live in
+        ``utils.write_driver_parquet``, the read in
+        ``utils.read_driver_parquet``.
         """
         import pyarrow as pa
-
-        from ..utils import write_driver_parquet
 
         cols = list(zip(*rows))
         table = pa.Table.from_arrays(
@@ -375,17 +378,35 @@ class ExecutionLog:
         )
 
     def id_rows(self, ingestion_id: int) -> list:
-        """Every log row for one ingestion id, collected driver-side in
-        ONE job. The log holds O(runs) metadata rows per id by design, so
-        the collect is tiny — and the per-run state machinery (orphan
-        cleanup, watermark resolution, latest-entry lookups) can share
-        one snapshot instead of paying a separate scan job per question
-        it asks of the same handful of rows."""
-        return (
-            self.read()
-            .filter(F.col("lake_ingestion_id") == ingestion_id)
-            .collect()
+        """Every log row for one ingestion id, read on the DRIVER with no
+        Spark job: :func:`~..utils.read_driver_parquet` lists the batch
+        directories and reads each file's bytes through the Hadoop FS
+        API into pyarrow (the read twin of :meth:`_write_batch`). The
+        rows are those of ``read().filter(id).collect()``: the same
+        ``Row`` shape, in-flight and ``_``-prefixed files skipped, and
+        ``insert_datetime`` as the naive local datetime ``collect()``
+        gives. The log holds O(runs) metadata rows per id by design, so
+        the per-run state machinery (orphan cleanup, watermark
+        resolution, latest-entry lookups) shares one snapshot instead of
+        paying a separate scan per question it asks of the same handful
+        of rows."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(LOG_SCHEMA)
+        t = read_driver_parquet(self.spark, self.path, schema)
+        t = t.filter(pc.equal(t["lake_ingestion_id"], ingestion_id))
+        ts = T.TimestampType()
+        cols = list(t.drop_columns(["insert_datetime"]).to_pydict().values())
+        cols.append(
+            [
+                None if us is None else ts.fromInternal(us)
+                for us in t["insert_datetime"].cast(pa.int64()).to_pylist()
+            ]
         )
+        names = LOG_SCHEMA.names
+        return [Row(**dict(zip(names, values))) for values in zip(*cols)]
 
     def latest_entry(
         self, ingestion_id: int, status: str | None = None, rows: list | None = None

@@ -3,7 +3,11 @@
 Single-JVM local mode for tests/bench, but every default is chosen to be
 cluster-safe: AQE on (runtime coalesce + skew-join handling), UTC session
 timezone (oracle comparability), Arrow enabled for the pandas-UDF paths,
-shuffle partitions sized to cores rather than the 200 default.
+shuffle partitions sized to cores rather than the 200 default, and the
+parallel partition-discovery job sized to cores too: past 32 directories
+Spark lists a lake in a Spark job with one task per directory (10,000 at
+most), so an 80-partition lake would pay 80 tiny tasks per read. ``cpus``
+tasks keep the listing parallel for object stores without that fan-out.
 """
 
 from __future__ import annotations
@@ -24,7 +28,8 @@ def get_spark(
     ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` then ``os.cpu_count()``.
     ``shuffle_partitions`` defaults to ``cpus`` — on a real cluster you
     would size this to total executor cores (or rely on AQE coalescing,
-    which is enabled here and does the right thing at any scale).
+    which is enabled here and does the right thing at any scale). The
+    partition-discovery listing job follows the same rule: ``cpus`` tasks.
     """
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS") or (os.cpu_count() or 4)
@@ -38,6 +43,7 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -104,6 +104,70 @@ def write_driver_parquet(
             os.unlink(local)
 
 
+def read_driver_parquet(spark, path: str, schema):
+    """Every visible parquet file under ``path``, read on the DRIVER into
+    one pyarrow table of ``schema`` (a ``pyarrow.Schema``) — the read twin
+    of :func:`write_driver_parquet`. Files are found with one
+    ``listStatus`` per directory and their bytes fetched through the
+    Hadoop FS API, so every scheme works without a Spark job. Like a
+    schema-pinned ``spark.read.parquet``: ``.``/``_``-prefixed names
+    (in-flight files, ``_SUCCESS``, checksums) are skipped, a column a
+    file lacks reads as null, and timestamps without a zone (the INT96
+    a Spark committer writes) are UTC instants. A missing ``path`` reads
+    as an empty table. For metadata-scale directories only."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from .ingest.merge import _fs, _walk
+
+    jvm, fs, root = _fs(spark, path)
+    if not fs.exists(root):
+        return schema.empty_table()
+    read_all = jvm.org.apache.commons.io.IOUtils.toByteArray
+    tables = []
+    for st in _walk(fs, root, skip_hidden=True):
+        stream = fs.open(st.getPath())
+        try:
+            t = pq.read_table(pa.BufferReader(read_all(stream)))
+        finally:
+            stream.close()
+        tables.append(
+            pa.table(
+                [
+                    t[f.name].cast(f.type, safe=False)
+                    if f.name in t.column_names
+                    else pa.nulls(t.num_rows, f.type)
+                    for f in schema
+                ],
+                schema=schema,
+            )
+        )
+    return pa.concat_tables(tables) if tables else schema.empty_table()
+
+
+def driver_frame(spark, rows: list, schema):
+    """A small DataFrame of ``rows`` (tuples in the order of ``schema``, a
+    Spark ``StructType``) built on the driver through Arrow. A Python list
+    given to ``createDataFrame`` becomes a Python RDD, whose first action
+    launches Python workers; an Arrow table is handed to the JVM as is.
+    Naive datetimes are driver-local wall clock, as ``createDataFrame``
+    reads them."""
+    import pyarrow as pa
+    from pyspark.sql import types as st
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for f, af, values in zip(schema.fields, arrow, cols):
+        if isinstance(f.dataType, st.TimestampType):
+            micros = [None if v is None else f.dataType.toInternal(v) for v in values]
+            arrays.append(pa.array(micros, pa.int64()).cast(af.type))
+        else:
+            arrays.append(pa.array(values, af.type))
+    return spark.createDataFrame(pa.table(arrays, schema=arrow), schema)
+
+
 def with_retries(
     fn: Callable[[], T],
     attempts: int = 3,

@@ -281,6 +281,36 @@ def test_delta_two_run_incremental_equals_full_load(
     assert r3.status == STATUS_NO_DATA
 
 
+def test_delta_noop_run_commits_nothing(
+    spark, tmp_path, fake_delta, monkeypatch
+):
+    """A rerun with no new rows logs NO_DATA before the append: no empty
+    Delta commit, no new lake file, and the log's history and change feed
+    read the same as before it."""
+    from datalakeingestion_spark.ingest import timetravel as tt
+    from datalakeingestion_spark.ingest.pipeline import _list_files
+
+    job = _delta_job(spark, tmp_path)
+    assert job.run().status == STATUS_SUCCESS
+    monkeypatch.setattr(dsink, "is_delta_table", lambda s, p: True)
+
+    def state():
+        feed = tt.read_changes(spark, job.log, 1, job.target_location)
+        return (
+            len(fake_delta.commits[job.target_location]),
+            _list_files(spark, job.target_location),
+            tt.history(job.log, 1).collect(),
+            sorted(feed.groupBy("_commit_version").count().collect()),
+        )
+
+    before = state()
+    r = _delta_job(spark, tmp_path, log=job.log).run()
+    assert r.status == STATUS_NO_DATA
+    assert state() == before
+    last = max(job.log.id_rows(1), key=lambda row: row["insert_datetime"])
+    assert last["execution_status"] == STATUS_NO_DATA
+
+
 def test_delta_validation_failure_restores_previous_version(
     spark, tmp_path, fake_delta, monkeypatch
 ):

@@ -362,16 +362,18 @@ def test_jdbc_dml_writers_round_trip(spark, tmp_path):
     assert read("ORDERS").count() == 5
 
 
-def test_live_source_growth_between_bounds_and_write(spark, tmp_path, monkeypatch):
-    """Against a LIVE source every action re-executes the query, so the
-    bounds pass and the write pass can see different rows. Rows committed
-    in between (with later delta values) must stay out of this batch —
-    the watermark only advances to the observed max, so they would be
-    re-pulled next run as lake duplicates."""
+def test_live_source_growth_after_observed_write(spark, tmp_path, monkeypatch):
+    """Against a LIVE source every action re-executes the query, so any
+    later read of the source (validation, a second scan) can see rows the
+    write did not. Rows committed after the batch's one scan (with later
+    delta values) must stay out of this batch — the watermark only
+    advances to the observed max, so they would be re-pulled next run as
+    lake duplicates."""
     from pyspark.sql import functions as F
 
     from datalakeingestion_spark.ingest.pipeline import IncrementalIngestJob
     from datalakeingestion_spark.ingest.watermark import (
+        STATUS_LOADED,
         STATUS_SUCCESS,
         ExecutionLog,
     )
@@ -403,18 +405,19 @@ def test_live_source_growth_between_bounds_and_write(spark, tmp_path, monkeypatc
         )
 
     grown = {"done": False}
-    orig = IncrementalIngestJob._bounds
+    orig = ExecutionLog.append
 
-    def bounds_then_commit_more(self, delta):
-        out = orig(self, delta)
-        if not grown["done"]:  # a writer commits more rows mid-run
+    def append_then_commit_more(self, ingestion_id, status, *args, **kwargs):
+        out = orig(self, ingestion_id, status, *args, **kwargs)
+        if status == STATUS_LOADED and not grown["done"]:
+            # a writer commits more rows right after the batch's write
             late.toDF(*[c.upper() for c in late.columns]).write.jdbc(
                 url, "EVENTS", mode="append", properties=props
             )
             grown["done"] = True
         return out
 
-    monkeypatch.setattr(IncrementalIngestJob, "_bounds", bounds_then_commit_more)
+    monkeypatch.setattr(ExecutionLog, "append", append_then_commit_more)
 
     def job():
         return IncrementalIngestJob(
@@ -427,6 +430,7 @@ def test_live_source_growth_between_bounds_and_write(spark, tmp_path, monkeypatc
         )
 
     r1 = job().run()
+    assert grown["done"]
     assert r1.status == STATUS_SUCCESS and r1.source_count == early.count()
     lake = spark.read.parquet(str(tmp_path / "lake"))
     assert lake.count() == early.count()  # mid-run commits excluded

@@ -563,21 +563,20 @@ def test_schema_evolution_read_lake(spark, events, tmp_path):
     assert lake.filter(F.col("quality").isNotNull()).count() == r2.source_count
 
 
-def test_source_growth_between_bounds_and_write_not_duplicated(
+def test_source_growth_after_observed_write_not_duplicated(
     spark, events, tmp_path, monkeypatch
 ):
-    """The bounds pass and the write are separate scans: rows a live
-    source commits in between (with later delta values) must NOT sneak
-    into this batch — the watermark only advances to the observed max,
-    so they'd be re-pulled next run as duplicates. They belong to, and
-    arrive exactly once in, the NEXT batch.
+    """A live source that commits rows (with later delta values) after the
+    batch's one scan: they must NOT count toward this batch — the
+    watermark only advances to the observed max, so the LOADED row must
+    describe exactly the rows written. They belong to, and arrive exactly
+    once in, the NEXT batch.
 
     NOTE: parquet sources freeze their file listing at DataFrame
     creation, so this file-based variant mostly documents the intended
     semantics; the LIVE reproduction (where each action re-executes the
     source query) is tests/test_jdbc.py::
-    test_live_source_growth_between_bounds_and_write, which fails
-    without the mx cap."""
+    test_live_source_growth_after_observed_write."""
     early = events.filter(F.col("ts") <= MID)
     late = events.filter(F.col("ts") > MID)
     src = str(tmp_path / "growing_src")
@@ -587,21 +586,23 @@ def test_source_growth_between_bounds_and_write_not_duplicated(
         "basePath", src
     ).parquet(src)
     grown = {"done": False}
-    orig = IncrementalIngestJob._bounds
+    orig = ExecutionLog.append
 
-    def bounds_then_grow(self, delta):
-        out = orig(self, delta)
-        if not grown["done"]:  # the "live source" commits more rows now
+    def append_then_grow(self, ingestion_id, status, *args, **kwargs):
+        out = orig(self, ingestion_id, status, *args, **kwargs)
+        if status == STATUS_LOADED and not grown["done"]:
+            # the "live source" commits more rows right after the write
             late.write.mode("append").parquet(src)
-            # drop the cached file listing so the WRITE pass re-lists —
+            # drop the cached file listing so any later action re-lists —
             # which is what every action against a real JDBC source does
             spark.catalog.refreshByPath(src)
             grown["done"] = True
         return out
 
-    monkeypatch.setattr(IncrementalIngestJob, "_bounds", bounds_then_grow)
+    monkeypatch.setattr(ExecutionLog, "append", append_then_grow)
 
     r1 = _job(spark, source, tmp_path).run()
+    assert grown["done"]
     assert r1.status == STATUS_SUCCESS and r1.source_count == early.count()
     target = str(tmp_path / "lake" / "events")
     lake = spark.read.parquet(target)
@@ -617,3 +618,116 @@ def test_source_growth_between_bounds_and_write_not_duplicated(
     lake = spark.read.parquet(target)
     assert lake.count() == events.count()
     assert lake.groupBy("event_id").count().filter("count > 1").count() == 0
+
+
+# ---------------------------------------------------------------------------
+# One source scan: the observed write, the no-op probe, the listing
+# ---------------------------------------------------------------------------
+
+
+def _loaded_bounds(log, ingestion_id):
+    (row,) = [
+        r for r in log.id_rows(ingestion_id)
+        if r["execution_status"] == STATUS_LOADED
+    ]
+    return row["start_value"], row["end_value"], row["source_count"]
+
+
+@pytest.mark.parametrize("kind", ["integer", "exact_second_ts", "date"])
+def test_observed_bounds_equal_the_bounds_aggregate(spark, tmp_path, kind):
+    """The LOADED row's start/end/count, observed during the write, are
+    the strings the separate ``_bounds`` aggregate gives for the same
+    frame: integers, µs timestamps that land on a whole second (the
+    fraction is still written as .000000), and dates (bare format)."""
+    import datetime as dt
+
+    from datalakeingestion_spark.ingest.watermark import (
+        DATETIME_EPOCH,
+        INTEGER_EPOCH,
+    )
+
+    rows = [(i, dt.datetime(2024, 1, 1 + i, 10, 0, 0), dt.date(2024, 2, 1 + i))
+            for i in range(1, 6)]
+    source = spark.createDataFrame(rows, "id long, ts timestamp, d date")
+    field, integer, start = {
+        "integer": ("id", True, INTEGER_EPOCH),
+        "exact_second_ts": ("ts", False, DATETIME_EPOCH),
+        "date": ("d", False, DATETIME_EPOCH),
+    }[kind]
+    job = _job(spark, source, tmp_path, delta_field=field,
+               integer_watermark=integer, partition_spec=None)
+    r = job.run()
+    assert r.status == STATUS_SUCCESS and r.target_count == 5
+    expected = job._bounds(job._delta_frame(start))
+    assert _loaded_bounds(job.log, 1) == expected
+    assert (r.start_value, r.end_value, r.source_count) == expected
+    assert {
+        "integer": ("1", "5", 5),
+        "exact_second_ts": (
+            "2024-01-02 10:00:00.000000", "2024-01-06 10:00:00.000000", 5
+        ),
+        "date": ("2024-02-02 00:00:00", "2024-02-06 00:00:00", 5),
+    }[kind] == expected
+
+
+def test_noop_run_stages_nothing(spark, events, tmp_path):
+    """A run with no new rows logs NO_DATA without writing: no staging
+    dir, no new lake file, and the commit history is unchanged. An empty
+    source's first run does not even create the lake dir."""
+    import os
+
+    from datalakeingestion_spark.ingest.pipeline import _list_files
+    from datalakeingestion_spark.ingest.timetravel import history
+
+    job = _job(spark, events, tmp_path)
+    assert job.run().status == STATUS_SUCCESS
+    files = _list_files(spark, job.target_location)
+    commits = history(job.log, 1).collect()
+    r = _job(spark, events, tmp_path).run()
+    assert r.status == STATUS_NO_DATA
+    assert not any(
+        n.startswith(".staging-") for n in os.listdir(job.target_location)
+    )
+    assert _list_files(spark, job.target_location) == files
+    assert history(job.log, 1).collect() == commits
+    assert job.log.id_rows(1) and max(
+        job.log.id_rows(1), key=lambda row: row["insert_datetime"]
+    )["execution_status"] == STATUS_NO_DATA
+
+    empty = _job(spark, events.limit(0), tmp_path, ingestion_id=2,
+                 target_location=str(tmp_path / "lake" / "empty"))
+    assert empty.run().status == STATUS_NO_DATA
+    assert not os.path.exists(empty.target_location)
+
+
+def _list_files_recursive(spark, path):
+    """The listing ``_list_files`` replaced: ``listFiles(recursive)``."""
+    from datalakeingestion_spark.ingest.merge import _fs
+
+    _, fs, p = _fs(spark, path)
+    out, it = set(), fs.listFiles(p, True)
+    while it.hasNext():
+        name = it.next().getPath().toString()
+        if not name.endswith("_SUCCESS"):
+            out.add(name)
+    return out
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_list_files_matches_recursive_listing(spark, events, tmp_path, scheme):
+    """One listStatus per directory finds exactly the files, and the
+    fully-qualified names, that ``listFiles(recursive)`` found: on a
+    partitioned staging tree, under a bare path and a ``file:///`` one."""
+    from datalakeingestion_spark.ingest.pipeline import _list_files
+
+    staging = f"{scheme}{tmp_path}/lake/.staging-x"
+    (
+        PartitionSpec("ts", "time-based", "YYYYMMDD")
+        .derive(events)
+        .write.partitionBy("ts_part")
+        .parquet(staging)
+    )
+    got = _list_files(spark, staging)
+    assert len(got) > 10 and all("ts_part=" in f for f in got)
+    assert got == _list_files_recursive(spark, staging)
+    assert _list_files(spark, f"{scheme}{tmp_path}/missing") == set()

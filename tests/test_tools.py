@@ -163,3 +163,21 @@ def test_tools_hold_no_probe_scripts_and_citations_resolve():
             ):
                 stale.append(f"{os.path.relpath(path, REPO)}: {m.group(0)}")
     assert stale == []
+
+
+@pytest.mark.smoke
+def test_package_never_lists_with_listfiles():
+    """Listing stays one ``listStatus`` per directory (``ingest.merge._walk``):
+    ``FileSystem.listFiles`` builds a ``LocatedFileStatus``, block
+    locations included, per file."""
+    calls = []
+    for base, _, files in os.walk(os.path.join(REPO, "datalakeingestion_spark")):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(base, f)
+            with open(path, encoding="utf-8") as fh:
+                for i, line in enumerate(fh, 1):
+                    if ".listFiles(" in line:
+                        calls.append(f"{os.path.relpath(path, REPO)}:{i}")
+    assert calls == []

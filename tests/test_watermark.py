@@ -158,3 +158,70 @@ def test_mixed_precision_end_values_ordered_as_timestamps(log):
     log.append(1, STATUS_SUCCESS, end_value="2024-03-01 00:00:00.500000")
     log.append(1, STATUS_SUCCESS, end_value="2024-03-01 00:00:00")
     assert log.last_success_end(1) == "2024-03-01 00:00:00.500000"
+
+
+_ID_ROWS_SCRIPT = r"""
+import os, sys, time, uuid
+from datetime import datetime
+
+sys.path.insert(0, sys.argv[1])
+assert time.localtime().tm_gmtoff != 0, "the check needs a non-UTC zone"
+from pyspark.sql import functions as F
+
+from datalakeingestion_spark.ingest.watermark import (
+    LOG_SCHEMA, STATUS_STARTED, STATUS_SUCCESS, ExecutionLog,
+)
+from datalakeingestion_spark.session import get_spark
+
+spark = get_spark(app_name="id-rows-tz", cpus=1)
+root = sys.argv[2]
+missing = ExecutionLog(spark, os.path.join(root, "missing"))
+assert missing.id_rows(1) == [], "missing log"
+log = ExecutionLog(spark, os.path.join(root, "log"))
+log.append(1, STATUS_STARTED, start_value="2020-01-01 00:00:00")
+log.append(1, STATUS_SUCCESS, "a", "2021-06-01 12:34:56.123456", 5, 5, "rc")
+log.append_commit(1, "a", "b", 9, '["f1","f2"]')
+log.append(2, STATUS_SUCCESS, end_value="7")
+# a committer-written batch: _SUCCESS marker, checksums, INT96 timestamps
+spark.createDataFrame(
+    [(1, STATUS_SUCCESS, "", "2022-01-01 00:00:00", 1, 1, "", datetime.now())],
+    LOG_SCHEMA,
+).coalesce(1).write.parquet(os.path.join(log.path, f"batch-{uuid.uuid4().hex}"))
+# an append caught mid-copy: a partial file under its in-flight name
+batch = os.path.join(log.path, f"batch-{uuid.uuid4().hex}")
+os.makedirs(batch)
+with open(os.path.join(batch, ".inflight-0"), "wb") as fh:
+    fh.write(b"PAR1 partial")
+for i in (1, 2, 3):
+    got = log.id_rows(i)
+    want = log.read().filter(F.col("lake_ingestion_id") == i).collect()
+    key = lambda r: (r["insert_datetime"], r["execution_status"])
+    assert sorted(got, key=key) == sorted(want, key=key), (i, got, want)
+    assert [r.__fields__ for r in got] == [r.__fields__ for r in want]
+print("rows", len(log.id_rows(1)))
+"""
+
+
+def test_id_rows_equals_spark_collect_in_a_non_utc_zone(tmp_path):
+    """The driver-side ``id_rows`` returns the rows of
+    ``read().filter(id).collect()``: same Row shape, same values, and
+    ``insert_datetime`` as the same naive local time, checked in a fresh
+    process whose local zone is not UTC. The log holds in-flight and
+    ``_SUCCESS`` files, a committer-written batch and an
+    ``append_commit`` pair; a missing log reads as no rows."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TZ="America/New_York", SPARK_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [sys.executable, "-c", _ID_ROWS_SCRIPT, repo, str(tmp_path)],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    # STARTED, SUCCESS, the append_commit pair and the committer row
+    assert "rows 5" in proc.stdout
