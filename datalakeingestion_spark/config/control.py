@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..utils import driver_frame
+
 # 21 columns, names per the reference (update_config.py:34-41).
 CONTROL_SCHEMA = T.StructType(
     [
@@ -66,7 +68,8 @@ def load_control(spark: SparkSession, path: str, fmt: str = "csv") -> DataFrame:
         as_str = T.StructType(
             [T.StructField(n, T.StringType()) for n in want]
         )
-        raw = spark.createDataFrame(
+        raw = driver_frame(
+            spark,
             [[None if v is None else str(v) for v in r] for r in rows],
             as_str,
         )

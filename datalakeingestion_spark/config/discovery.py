@@ -27,6 +27,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..utils import driver_frame
 from .control import CONTROL_SCHEMA, next_ingestion_id
 
 _DATETIME_TYPES = ("datetime", "timestamp", "date")
@@ -127,7 +128,7 @@ def discover_tables(
                 now,
             )
         )
-    return spark.createDataFrame(rows, CONTROL_SCHEMA)
+    return driver_frame(spark, rows, CONTROL_SCHEMA)
 
 
 def merge_control(existing: DataFrame, discovered: DataFrame) -> DataFrame:

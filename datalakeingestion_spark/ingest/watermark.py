@@ -33,7 +33,12 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import types as T
 
-from ..utils import driver_frame, read_driver_parquet, write_driver_parquet
+from ..utils import (
+    arrow_rows,
+    driver_frame,
+    read_driver_parquet,
+    write_driver_parquet,
+)
 from .merge import _fs
 
 # 8 columns per the reference (config/basic_config.py:54-57).
@@ -262,7 +267,9 @@ class ExecutionLog:
         ``createDataFrame`` + a one-task parquet write paid a full Spark
         job (~0.3-0.7 s of scheduler/committer floor) per state
         transition — 3+ jobs per ingest batch for rows of a few hundred
-        bytes. The row is instead serialized with pyarrow locally and
+        bytes. The row is instead built as an Arrow table by
+        ``utils.arrow_rows`` (createDataFrame's value checks and its
+        reading of naive datetimes as local time), serialized locally and
         copied into place through the Hadoop FS API, so the path works
         for any supported scheme (file://, hdfs://, s3a://...) exactly
         like the old committer did. The file lands under a dot-prefixed
@@ -279,34 +286,10 @@ class ExecutionLog:
         ``utils.write_driver_parquet``, the read in
         ``utils.read_driver_parquet``.
         """
-        import pyarrow as pa
-
-        cols = list(zip(*rows))
-        table = pa.Table.from_arrays(
-            [
-                pa.array(cols[0], pa.int32()),
-                pa.array(cols[1], pa.string()),
-                pa.array(cols[2], pa.string()),
-                pa.array(cols[3], pa.string()),
-                pa.array(cols[4], pa.int64()),
-                pa.array(cols[5], pa.int64()),
-                pa.array(cols[6], pa.string()),
-                # naive datetimes are driver-local wall clock — the same
-                # interpretation createDataFrame applied (TimestampType
-                # .toInternal uses the local tz) — so attach the local
-                # offset before the UTC-normalized arrow column
-                pa.array(
-                    [
-                        v if v.tzinfo is not None else v.astimezone()
-                        for v in cols[7]
-                    ],
-                    pa.timestamp("us", tz="UTC"),
-                ),
-            ],
-            names=[f.name for f in LOG_SCHEMA.fields],
-        )
         write_driver_parquet(
-            self.spark, table, f"{self.path}/batch-{uuid.uuid4().hex}"
+            self.spark,
+            arrow_rows(rows, LOG_SCHEMA),
+            f"{self.path}/batch-{uuid.uuid4().hex}",
         )
 
     def append(

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash32, portable_hash32_sql, portable_hash60
 from ..functions.text import distinct_shingles, tokens, word_shingles
+from ..utils import driver_frame
 
 # MinHash parameters — shared with the SQL oracle generator (plans/llm.py).
 MINHASH_PERMS = 16
@@ -875,27 +876,14 @@ def _local_cc_labels(edge_rows, node_ids):
     return [(n, best[find(n)]) for n in node_ids]
 
 
-#: Literal-frame bound for driver-solved CC labels — TIGHTER than
-#: local_rows_frame's general 10k: the labels frame is broadcast-joined
-#: into already-deep consumer plans (ER merge, curation v3), and a
-#: thousand-struct literal inside a BroadcastExchange child blew the
-#: bare 1 GB driver's broadcast build (measured: entity_resolution_merge
-#: OOM at ~1.3k string label rows). Typical verified-dedup graphs are
-#: well under this; bigger label sets take the pickled createDataFrame
-#: wave, whose one extra task is noise at that size.
-MAX_LITERAL_LABEL_ROWS = 256
-
-
 def _local_labels_frame(spark, template: DataFrame, labels: list) -> DataFrame:
     """(node, label) frame from driver-side labels, typed like the edge
     frame's id column so the local path's schema matches the distributed
-    one. Small label sets render as a JVM literal (local_rows_frame) —
-    a createDataFrame here plans as applySchemaToPythonRDD, so every
-    ACTION over a CC consumer re-ran a pickled task wave just to replay
-    the solved labels."""
+    one. Built with ``utils.driver_frame``: it plans as a JVM
+    ``LocalRelation``, so an action over a CC consumer replays the solved
+    labels without Python workers, and its size in the plan does not
+    grow with one expression per row."""
     from pyspark.sql import types as T
-
-    from .packing import local_rows_frame
 
     id_type = template.schema.fields[0].dataType
     schema = T.StructType(
@@ -904,9 +892,7 @@ def _local_labels_frame(spark, template: DataFrame, labels: list) -> DataFrame:
             T.StructField("label", id_type, True),
         ]
     )
-    if len(labels) > MAX_LITERAL_LABEL_ROWS:
-        return spark.createDataFrame(labels, schema)
-    return local_rows_frame(spark, labels, schema)
+    return driver_frame(spark, labels, schema)
 
 
 def connected_components(

@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..utils import driver_frame
+
 
 def pack_sequences(
     docs: DataFrame,
@@ -282,7 +284,7 @@ def bpe_train(
                 ).alias("syms"),
                 "cnt",
             ).localCheckpoint(eager=True)
-    return local_rows_frame(
+    return driver_frame(
         spark,
         merges,
         "merge_rank int, lhs string, rhs string, merged string, "
@@ -391,105 +393,6 @@ def bpe_fertility(
 #: Past this, the key cardinality is data-sized and the two-pass form is
 #: the wrong tool — fail loudly instead of OOMing the driver.
 MAX_SUBTOTAL_ROWS = 1_000_000
-
-#: Largest driver-side row list rendered as a pure-JVM literal frame by
-#: ``local_rows_frame``; bigger lists fall back to ``createDataFrame``
-#: (a 3-column struct literal costs ~4 expression nodes per row — past
-#: ~10k rows analyzer time starts to rival the Python-RDD cost it saves).
-MAX_LITERAL_ROWS = 10_000
-
-
-#: Python types a literal can faithfully render per Spark type —
-#: anything else (and any out-of-range integral) falls back to
-#: ``createDataFrame`` so construction-time validation stays identical
-#: (r13, ADVICE: the bare ``F.lit(v).cast`` path deferred value errors
-#: to execution, where a non-ANSI session would null-coerce silently).
-_LIT_RANGES = {
-    T.ByteType: (-(1 << 7), (1 << 7) - 1),
-    T.ShortType: (-(1 << 15), (1 << 15) - 1),
-    T.IntegerType: (-(1 << 31), (1 << 31) - 1),
-    T.LongType: (-(1 << 63), (1 << 63) - 1),
-}
-
-
-def _lit_compatible(v, field: T.StructField) -> bool:
-    if v is None:
-        return bool(field.nullable)
-    dt = type(field.dataType)
-    if dt in _LIT_RANGES:
-        lo, hi = _LIT_RANGES[dt]
-        return (
-            isinstance(v, int)
-            and not isinstance(v, bool)
-            and lo <= v <= hi
-        )
-    if dt in (T.DoubleType, T.FloatType):
-        return isinstance(v, (int, float)) and not isinstance(v, bool)
-    if dt is T.StringType:
-        return isinstance(v, str)
-    if dt is T.BooleanType:
-        return isinstance(v, bool)
-    return False  # decimals/dates/exotic types: take the verified path
-
-
-def local_rows_frame(
-    spark, rows, schema: T.StructType | str
-) -> DataFrame:
-    """Small driver-side row list -> DataFrame WITHOUT the Python-RDD
-    path. ``schema`` accepts the same DDL string ``createDataFrame``
-    does (parsed up front), so call sites swap in-place.
-
-    ``spark.createDataFrame(rows)`` plans as ``applySchemaToPythonRDD``:
-    every evaluation of the frame (and a broadcast that is rebuilt per
-    action counts as one) runs pickled-Python tasks across the default
-    parallelism — measured on the r12 stage probe at ~9 s executorRunTime
-    / ~0.3 s wall PER evaluation for a 64-row offsets frame, with zero
-    bytes of real input (guide §4: the boundary itself is the cost).
-    Rendering the rows as a literal ``inline(array(struct(...)))`` over a
-    one-partition ``range(1)`` keeps every later evaluation JVM-only.
-
-    Falls back to ``createDataFrame`` for empty/huge lists, values a
-    literal cannot faithfully render (exotic types, out-of-range
-    integrals, NULL in a non-nullable field — validated up front so
-    value errors surface at construction exactly like createDataFrame's,
-    never as a deferred cast), or any construction failure. The literal
-    frame is reconciled with ``.to(schema)`` so the result schema —
-    including nullability — matches the createDataFrame path.
-    """
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    if not rows or len(rows) > MAX_LITERAL_ROWS:
-        return spark.createDataFrame(rows, schema)
-    fields = schema.fields
-    if not all(
-        len(r) == len(fields)
-        and all(_lit_compatible(v, f) for f, v in zip(fields, r))
-        for r in rows
-    ):
-        return spark.createDataFrame(rows, schema)
-    def _lit(v, f: T.StructField):
-        # a bare (or try_cast) literal analyzes non-nullable under
-        # Spark 4's finish-analysis constant folding, so the literal
-        # frame's schema would diverge from createDataFrame's in
-        # nullability (the ADVICE r12 latent divergence). CASE WHEN on
-        # a nondeterministic no-op (the curation._pin_once trick) is
-        # nullable at analysis, value-preserving, and fold-proof.
-        col = F.lit(v).cast(f.dataType)
-        if f.nullable:
-            col = F.when(F.spark_partition_id() >= 0, col)
-        return col.alias(f.name)
-
-    try:
-        structs = [
-            F.struct(*[_lit(v, f) for f, v in zip(fields, r)])
-            for r in rows
-        ]
-        return spark.range(0, 1, 1, 1).select(
-            F.inline(F.array(*structs))
-        )
-    except Exception:
-        return spark.createDataFrame(rows, schema)
-
 
 #: Target bytes per range bucket for the prefix-sum bucketing — the
 #: guide §2.2 "100 MB – 1 GB reduce partitions" band.
@@ -617,10 +520,7 @@ def keyed_prefix_sum(
         + [df.schema[c] for c in key_cols]
         + [T.StructField("_off", T.LongType())]
     )
-    # JVM-literal frame: the offsets broadcast is rebuilt on EVERY action
-    # over the result, and the createDataFrame form paid a full
-    # pickled-Python task wave each time (see local_rows_frame)
-    offsets = local_rows_frame(spark, off_rows, off_schema)
+    offsets = driver_frame(spark, off_rows, off_schema)
 
     # pass 2: fine-grained window + broadcast offset join, JVM-side
     w = (

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..utils import driver_frame
+
 
 def _moment_partials(
     embeddings: DataFrame, vec_col: str
@@ -122,9 +124,7 @@ def pca_contract(
     ortho = bool(np.allclose(gram, np.eye(comps.shape[0]), atol=1e-6))
     spark = embeddings.sparkSession
     n = embeddings.count()
-    from .packing import local_rows_frame
-
-    return local_rows_frame(
+    return driver_frame(
         spark,
         [(n, int(comps.shape[1]), int(comps.shape[0]),
           bool(ratio >= min_var_ratio), ortho)],

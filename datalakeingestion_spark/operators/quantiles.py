@@ -33,11 +33,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..utils import driver_frame
+
 
 def _tenths_frame(spark, tenths: list[int]) -> DataFrame:
     if not tenths or any(not 1 <= t <= 9 for t in tenths):
         raise ValueError("tenths must be decile indices in 1..9")
-    return spark.createDataFrame([(t,) for t in tenths], "t int")
+    return driver_frame(spark, [(t,) for t in tenths], "t int")
 
 
 def _check_reserved(key_cols: list[str], reserved: set[str]) -> None:

@@ -24,7 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash32
-from .packing import local_rows_frame
+from ..utils import driver_frame
 
 HASH_SPACE_32 = float(1 << 32)
 
@@ -188,9 +188,7 @@ def cap_tokens_per_quota(
     from pyspark.sql import Window
 
     spark = df.sparkSession
-    # JVM-literal frame: the broadcast is rebuilt per action and a
-    # createDataFrame here pays a pickled task wave each time
-    qdf = local_rows_frame(
+    qdf = driver_frame(
         spark,
         [(g, int(b)) for g, b in sorted(quotas.items())],
         f"{group_col} string, _quota long",
@@ -237,7 +235,7 @@ def upsample_by_factor(
             "input already has a 'repeat_idx'/'_factor' column; rename it"
         )
     spark = df.sparkSession
-    fdf = local_rows_frame(
+    fdf = driver_frame(
         spark,
         [(g, int(x)) for g, x in sorted(factors.items())],
         f"{group_col} string, _factor int",

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..utils import arrow_rows, write_driver_parquet
 from .packing import keyed_prefix_sum, pack_sequences
 
 MANIFEST_DIR = "_manifest"
@@ -54,37 +55,10 @@ def _write_manifest_rows(spark, rows, schema, dest_dir: str) -> None:
     one-task overwrite write paid a full job of scheduler/committer
     floor per delivery (the execution-log finding, utils.
     write_driver_parquet). Readers are untouched: spark.read.parquet
-    sees one snappy file with the same column types. Falls back to the
-    distributed write for any column type outside the manifest's
-    integral/string/double vocabulary."""
-    import pyarrow as pa
-
-    from ..utils import write_driver_parquet
-
-    pa_types = {
-        "int": pa.int32(),
-        "bigint": pa.int64(),
-        "double": pa.float64(),
-        "string": pa.string(),
-    }
-    try:
-        arrays = [
-            pa.array([r[f.name] for r in rows], pa_types[f.dataType.simpleString()])
-            for f in schema.fields
-        ]
-    except KeyError:
-        (
-            spark.createDataFrame(rows, schema=schema)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(dest_dir)
-        )
-        return
+    sees one snappy file with the manifest's column types, built by
+    ``utils.arrow_rows`` from the manifest's own schema."""
     write_driver_parquet(
-        spark,
-        pa.Table.from_arrays(arrays, names=[f.name for f in schema.fields]),
-        dest_dir,
-        overwrite=True,
+        spark, arrow_rows(rows, schema), dest_dir, overwrite=True
     )
 
 

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils import driver_frame
 
 _DOT_PD = None
 
@@ -121,7 +122,7 @@ def _round6_spark(arr):
 #: contract was only a docstring — past this bound the collect would
 #: bloat the driver and every task closure, so the operator falls back
 #: to the broadcast-join formulation instead (r13, the
-#: packing.MAX_LITERAL_ROWS precedent).
+#: packing.MAX_SUBTOTAL_ROWS precedent).
 MAX_COLLECT_QUERIES = 100_000
 
 
@@ -257,7 +258,7 @@ def cosine_topk(
     )
     spark = embeddings.sparkSession
     if not q_rows:
-        return spark.createDataFrame([], out_schema)
+        return driver_frame(spark, [], out_schema)
     q_ids = np.array([r[0] for r in q_rows])
     Q = np.vstack(
         [np.asarray(r[1], dtype=np.float64) for r in q_rows]
@@ -466,7 +467,7 @@ def lsh_bucketed_topk(
     )
     spark = embeddings.sparkSession
     if not q_rows:
-        return spark.createDataFrame([], out_schema)
+        return driver_frame(spark, [], out_schema)
     q_ids = np.array([r[0] for r in q_rows])
     Q = np.vstack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
     q_norms = np.linalg.norm(Q, axis=1)

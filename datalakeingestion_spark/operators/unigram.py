@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ..utils import driver_frame
 
 
 def _int_cost(total: int, cnt: int) -> int:
@@ -310,8 +311,8 @@ def train_unigram_soft(
     words, vocab = _soft_vocab(docs, text_col, lmax, wmax, iters)
     total = vocab.agg(F.sum("cnt")).first()[0]  # bounded 1-row scalar
     if not total:
-        return spark.createDataFrame(
-            [], "piece string, n_uses_micro long, cost_micro_nats long"
+        return driver_frame(
+            spark, [], "piece string, n_uses_micro long, cost_micro_nats long"
         )
     out = vocab.select(
         "piece",
@@ -348,8 +349,8 @@ def train_unigram(
         # no training-eligible words (empty/NULL corpus, or every token
         # longer than wmax): degrade to an empty piece table, the same
         # contract as every other operator, instead of float(None)
-        return spark.createDataFrame(
-            [], "piece string, n_uses long, cost_micro_nats long"
+        return driver_frame(
+            spark, [], "piece string, n_uses long, cost_micro_nats long"
         )
     out = vocab.select(
         "piece",

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..operators.rangejoin import interval_join
 from ..sources.fixtures import load_table
+from ..utils import driver_frame
 from .llm import TOKS_SQL
 from .registry import register
 
@@ -135,9 +136,7 @@ def cms_term_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(tokens("text")).alias("x"))
     sketch = cms_sketch(toks, "x", depth=_CMS_DEPTH, width=_CMS_WIDTH)
-    from ..operators.packing import local_rows_frame
-
-    probes = local_rows_frame(
+    probes = driver_frame(
         spark, [(t,) for t in _CMS_PROBES], "term string"
     )
     return cms_estimate(sketch, probes, "term", depth=_CMS_DEPTH, width=_CMS_WIDTH)
@@ -358,9 +357,7 @@ def countsketch_term_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(F.explode(tokens("text")).alias("x"))
     sketch = countsketch_sketch(toks, "x", depth=5, width=_CMS_WIDTH)
-    from ..operators.packing import local_rows_frame
-
-    probes = local_rows_frame(
+    probes = driver_frame(
         spark, [(t,) for t in _CMS_PROBES], "term string"
     )
     return countsketch_estimate(sketch, probes, "term", depth=5, width=_CMS_WIDTH)

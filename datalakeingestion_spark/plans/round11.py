@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import n_tokens_of
 from ..sources.fixtures import load_table
+from ..utils import driver_frame
 from .llm import TOKS_SQL
 from .registry import register
 
@@ -224,9 +225,7 @@ def training_shard_delivery_contract(
         # partial (tail-only) dynamic-partition rewrite — the grown one
         tree_ok = _tree_eq(full) and _tree_eq(grown_path)
         n_shards = read_shard_manifest(spark, full).count()
-    from ..operators.packing import local_rows_frame
-
-    return local_rows_frame(
+    return driver_frame(
         spark,
         [(n_shards, replay_ok, tail_ok, tree_ok)],
         "n_shards long, replay_writes_nothing boolean, "

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import n_tokens_of
 from ..sources.fixtures import load_table
+from ..utils import driver_frame
 from .llm import TOKS_SQL
 from .round11 import (
     _DOC_TOKENS_SQL,
@@ -47,9 +48,7 @@ _QUOTAS: dict[str, int] = {
 def _quota_frame(spark: SparkSession) -> DataFrame:
     """The quota spec as a (source, quota) frame — the Spark pendant of
     ``_quota_values_sql``, shared by both quota contract queries."""
-    from ..operators.packing import local_rows_frame
-
-    return local_rows_frame(
+    return driver_frame(
         spark, sorted(_QUOTAS.items()), "source string, quota long"
     )
 
@@ -168,10 +167,8 @@ def quota_enforced_delivery_contract(
             .collect()  # bounded: one row per delivered source
         }
         tree_ok = tree_mix == report["selected"]
-    from ..operators.packing import local_rows_frame
-
     qdf = _quota_frame(spark)
-    sel = local_rows_frame(
+    sel = driver_frame(
         spark,
         [
             (s, v["n_docs"], v["n_tokens"])

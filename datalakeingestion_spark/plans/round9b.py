@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.fixtures import load_table
+from ..utils import driver_frame
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -1292,10 +1293,8 @@ _CLS_WEIGHT_NAMES = ["bias"] + _CLS_FEATURES
 )
 def quality_classifier_train_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = _cls_trained_weights(spark, sf_dir)
-    from ..operators.packing import local_rows_frame
-
     rows = list(zip(_CLS_WEIGHT_NAMES, w))
-    return local_rows_frame(
+    return driver_frame(
         spark, rows, "feature string, weight double"
     ).withColumn("weight", F.round("weight", 9))
 

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..utils import driver_frame
+
 
 def read_landing(
     spark: SparkSession,
@@ -143,4 +145,4 @@ def _read_excel(spark: SparkSession, path: str) -> DataFrame:
             else:
                 rec.append(v)
         cast_rows.append(rec)
-    return spark.createDataFrame(cast_rows, schema)
+    return driver_frame(spark, cast_rows, schema)

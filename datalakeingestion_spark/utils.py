@@ -145,17 +145,26 @@ def read_driver_parquet(spark, path: str, schema):
     return pa.concat_tables(tables) if tables else schema.empty_table()
 
 
-def driver_frame(spark, rows: list, schema):
-    """A small DataFrame of ``rows`` (tuples in the order of ``schema``, a
-    Spark ``StructType``) built on the driver through Arrow. A Python list
-    given to ``createDataFrame`` becomes a Python RDD, whose first action
-    launches Python workers; an Arrow table is handed to the JVM as is.
-    Naive datetimes are driver-local wall clock, as ``createDataFrame``
-    reads them."""
+def _struct(schema):
+    from pyspark.sql import types as st
+
+    return st.StructType.fromDDL(schema) if isinstance(schema, str) else schema
+
+
+def arrow_rows(rows: list, schema):
+    """``rows`` (tuples in the order of ``schema``) as a pyarrow table of
+    ``schema``, a Spark ``StructType`` or a DDL string. Every row first
+    passes the check ``createDataFrame`` runs (``verifySchema=True``), so
+    a bad value fails here with the same error. Naive datetimes are
+    driver-local wall clock, as ``createDataFrame`` reads them."""
     import pyarrow as pa
     from pyspark.sql import types as st
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    schema = _struct(schema)
+    verify = st._make_type_verifier(schema)
+    for r in rows:
+        verify(r)
     arrow = to_arrow_schema(schema)
     cols = list(zip(*rows)) or [()] * len(schema.fields)
     arrays = []
@@ -165,7 +174,19 @@ def driver_frame(spark, rows: list, schema):
             arrays.append(pa.array(micros, pa.int64()).cast(af.type))
         else:
             arrays.append(pa.array(values, af.type))
-    return spark.createDataFrame(pa.table(arrays, schema=arrow), schema)
+    return pa.table(arrays, schema=arrow)
+
+
+def driver_frame(spark, rows: list, schema):
+    """A DataFrame of driver-side ``rows`` (see :func:`arrow_rows`), the
+    package's one way to turn a Python row list into Spark data. A list
+    given to ``createDataFrame`` becomes a Python RDD, which every action
+    (and every rebuild of a broadcast over it) replays through Python
+    workers. An Arrow table plans as a JVM ``LocalRelation`` instead, up
+    to ``spark.sql.execution.arrow.localRelationThreshold``; above it,
+    Spark itself switches to a JVM RDD of Arrow batches."""
+    schema = _struct(schema)
+    return spark.createDataFrame(arrow_rows(rows, schema), schema)
 
 
 def with_retries(

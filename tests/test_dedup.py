@@ -156,7 +156,8 @@ def test_connected_components_local_path_matches_distributed(spark, monkeypatch)
     """r13 size-adaptive solve: a small pair graph resolves on the driver
     (union-find over the checkpointed edge collect) — its labels must be
     IDENTICAL to the distributed fixpoint's on the same graph, for both
-    variants, including ids of non-numeric type."""
+    variants, including ids of non-numeric type and a label set of more
+    than 256 nodes."""
     cases = [
         spark.createDataFrame(
             [(1, 2), (2, 3), (5, 4), (6, 7), (7, 8), (6, 8), (9, 9)],
@@ -164,6 +165,11 @@ def test_connected_components_local_path_matches_distributed(spark, monkeypatch)
         ),
         spark.createDataFrame(
             [("b", "c"), ("a", "b"), ("z", "z"), ("x", "y")],
+            ["doc_id_a", "doc_id_b"],
+        ),
+        # 300 string ids in short chains of 5 (n0000-n0001-...-n0004, ...)
+        spark.createDataFrame(
+            [(f"n{i + 1:04d}", f"n{i:04d}") for i in range(300) if i % 5 != 4],
             ["doc_id_a", "doc_id_b"],
         ),
     ]

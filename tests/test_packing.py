@@ -668,15 +668,26 @@ def test_sequence_boundaries_offsets_and_zero_token_exclusion(spark):
     assert only["n_docs"] == 2 and only["boundaries"] == "0:300"
 
 
-def test_local_rows_frame_literal_and_fallback(spark):
-    """r12: local_rows_frame renders small driver-side lists as a pure
-    JVM literal Generate (no applySchemaToPythonRDD — the Python-RDD
-    scan paid a pickled-Python task wave on EVERY broadcast rebuild);
-    rows, schema, NULLs, and over-cap fallback must all match the
-    createDataFrame form exactly."""
+def _plans_as_local_relation(df) -> bool:
+    qe = df._jdf.queryExecution()
+    executed = qe.executedPlan().toString()
+    return (
+        "LocalRelation" in qe.optimizedPlan().toString()
+        and "ExistingRDD" not in executed
+        and "Generate" not in executed
+    )
+
+
+def test_driver_frame_plans_as_local_relation(spark):
+    """utils.driver_frame hands driver-side rows to the JVM as Arrow: the
+    frame plans as a LocalRelation (no applySchemaToPythonRDD scan, whose
+    pickled-Python task wave re-ran on EVERY broadcast rebuild, and no
+    per-row literal Generate); rows and schema match the createDataFrame
+    form exactly, for empty, small and 10,001-row lists and for a DDL
+    schema."""
     from pyspark.sql import types as T
 
-    from datalakeingestion_spark.operators import packing as P
+    from datalakeingestion_spark.utils import driver_frame
 
     sch = T.StructType(
         [
@@ -686,32 +697,35 @@ def test_local_rows_frame_literal_and_fallback(spark):
         ]
     )
     rows = [(0, "a", 5), (1, None, 7), (2, "b", 0)]
-    lit = P.local_rows_frame(spark, rows, sch)
-    assert lit.schema.simpleString() == "struct<_pid:int,k:string,_off:bigint>"
-    assert sorted(map(tuple, lit.collect())) == sorted(rows)
-    # literal path: no Python-RDD scan in the plan
-    plan = lit._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" not in plan and "Generate" in plan
+    df = driver_frame(spark, rows, sch)
+    assert df.schema.simpleString() == "struct<_pid:int,k:string,_off:bigint>"
+    assert sorted(map(tuple, df.collect()), key=str) == sorted(rows, key=str)
+    assert _plans_as_local_relation(df)
 
-    # empty and over-cap lists fall back to createDataFrame (same rows)
-    assert P.local_rows_frame(spark, [], sch).count() == 0
-    big = [(i, str(i), i) for i in range(P.MAX_LITERAL_ROWS + 1)]
-    fb = P.local_rows_frame(spark, big, sch)
-    assert fb.count() == len(big)
-    assert "Generate" not in fb._jdf.queryExecution().executedPlan().toString()
+    assert driver_frame(spark, [], sch).count() == 0
+    big = [(i, str(i), i) for i in range(10_001)]
+    big_df = driver_frame(spark, big, sch)
+    assert big_df.count() == len(big)
+    assert _plans_as_local_relation(big_df)
+
+    ddl = "_pid int, k string, _off long"
+    from_ddl = driver_frame(spark, rows, ddl)
+    assert from_ddl.schema == spark.createDataFrame(rows, ddl).schema
+    assert sorted(map(tuple, from_ddl.collect()), key=str) == sorted(
+        rows, key=str
+    )
+    assert _plans_as_local_relation(from_ddl)
 
 
-def test_local_rows_frame_schema_nullability_and_value_validation(spark):
-    """r13 (ADVICE): the literal path must (a) produce a schema EQUAL
-    to createDataFrame's including nullability, and (b) never defer a
-    value error to a runtime cast — values a literal cannot faithfully
-    render (out-of-range integrals, NULL in a non-nullable field, wrong
-    Python type) take the createDataFrame path, which validates at
-    construction."""
+def test_driver_frame_schema_nullability_and_value_validation(spark):
+    """driver_frame must (a) produce a schema EQUAL to createDataFrame's
+    including nullability, and (b) raise a bad value at construction, as
+    createDataFrame does (out-of-range integral, NULL in a non-nullable
+    field, wrong Python type), never defer it to a runtime cast."""
     import pytest as _pytest
     from pyspark.sql import types as T
 
-    from datalakeingestion_spark.operators import packing as P
+    from datalakeingestion_spark.utils import driver_frame
 
     sch = T.StructType(
         [
@@ -721,18 +735,22 @@ def test_local_rows_frame_schema_nullability_and_value_validation(spark):
         ]
     )
     rows = [("a", 1, 10), ("b", 2, None)]
-    lit = P.local_rows_frame(spark, rows, sch)
+    df = driver_frame(spark, rows, sch)
     cdf = spark.createDataFrame(rows, sch)
-    assert lit.schema == cdf.schema  # nullability included
-    assert sorted(map(tuple, lit.collect())) == sorted(
+    assert df.schema == cdf.schema  # nullability included
+    assert df._jdf.schema().json() == cdf._jdf.schema().json()
+    assert sorted(map(tuple, df.collect())) == sorted(
         map(tuple, cdf.collect())
     )
-    # out-of-range int: construction-time error, same as createDataFrame
-    with _pytest.raises(Exception, match="2147483647|OUT_OF_BOUNDS"):
-        P.local_rows_frame(spark, [("a", 2**40, 1)], sch)
-    # NULL in a non-nullable field: construction-time error
-    with _pytest.raises(Exception):
-        P.local_rows_frame(spark, [("a", None, 1)], sch)
-    # wrong python type routes through the validated path
-    with _pytest.raises(Exception):
-        P.local_rows_frame(spark, [(1, 1, "x")], sch)
+    # out-of-range int, NULL in a non-nullable field, wrong Python type:
+    # createDataFrame's error, class and message, at construction
+    for bad, pattern in (
+        ([("a", 2**40, 1)], "2147483647|OUT_OF_BOUNDS"),
+        ([("a", None, 1)], "NOT_NULLABLE"),
+        ([(1, 1, "x")], "UNACCEPTABLE"),
+    ):
+        with _pytest.raises(Exception, match=pattern) as want:
+            spark.createDataFrame(bad, sch)
+        with _pytest.raises(type(want.value)) as got:
+            driver_frame(spark, bad, sch)
+        assert str(got.value) == str(want.value)

@@ -165,19 +165,51 @@ def test_tools_hold_no_probe_scripts_and_citations_resolve():
     assert stale == []
 
 
-@pytest.mark.smoke
-def test_package_never_lists_with_listfiles():
-    """Listing stays one ``listStatus`` per directory (``ingest.merge._walk``):
-    ``FileSystem.listFiles`` builds a ``LocatedFileStatus``, block
-    locations included, per file."""
-    calls = []
+def _package_lines():
+    """(path relative to the repo, line number, line) for every line of
+    the package's modules."""
     for base, _, files in os.walk(os.path.join(REPO, "datalakeingestion_spark")):
-        for f in files:
+        for f in sorted(files):
             if not f.endswith(".py"):
                 continue
             path = os.path.join(base, f)
             with open(path, encoding="utf-8") as fh:
                 for i, line in enumerate(fh, 1):
-                    if ".listFiles(" in line:
-                        calls.append(f"{os.path.relpath(path, REPO)}:{i}")
+                    yield os.path.relpath(path, REPO), i, line
+
+
+@pytest.mark.smoke
+def test_package_never_lists_with_listfiles():
+    """Listing stays one ``listStatus`` per directory (``ingest.merge._walk``):
+    ``FileSystem.listFiles`` builds a ``LocatedFileStatus``, block
+    locations included, per file."""
+    calls = [
+        f"{path}:{i}" for path, i, line in _package_lines() if ".listFiles(" in line
+    ]
     assert calls == []
+
+
+@pytest.mark.smoke
+def test_driver_rows_become_spark_data_one_way():
+    """``utils.driver_frame`` is the package's only row-list-to-DataFrame
+    path: the literal-frame renderer stays gone, and outside ``utils.py``
+    ``createDataFrame(`` appears only in the pandas read of
+    ``sources/files.py``, so a second path cannot grow back."""
+    utils = os.path.join("datalakeingestion_spark", "utils.py")
+    literal = [
+        f"{path}:{i}"
+        for path, i, line in _package_lines()
+        if "local_rows_frame" in line
+    ]
+    assert literal == []
+    calls = [
+        (path, line.strip())
+        for path, _, line in _package_lines()
+        if "createDataFrame(" in line and path != utils
+    ]
+    assert calls == [
+        (
+            os.path.join("datalakeingestion_spark", "sources", "files.py"),
+            "return spark.createDataFrame(pdf)",
+        )
+    ]

@@ -152,6 +152,35 @@ def test_append_is_driver_side_and_round_trips(log, spark):
     assert log.last_success_end(8) == "2022-01-01 00:00:00"
 
 
+
+def test_append_keeps_insert_datetime_in_a_non_utc_zone(log, monkeypatch):
+    """A naive ``insert_datetime`` is driver-local wall clock, as
+    createDataFrame reads it: with the process in a non-UTC zone, an
+    appended row reads back at the moment it was written, through
+    ``id_rows`` and through ``read().collect()`` alike (not shifted by
+    the zone's UTC offset)."""
+    import time
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        assert time.localtime().tm_gmtoff != 0
+        before = datetime.now()
+        log.append(3, STATUS_SUCCESS, end_value="x")
+        after = datetime.now()
+        (driver_row,) = log.id_rows(3)
+        (spark_row,) = (
+            log.read().filter(F.col("lake_ingestion_id") == 3).collect()
+        )
+        assert before <= driver_row["insert_datetime"] <= after
+        assert before <= spark_row["insert_datetime"] <= after
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
 def test_mixed_precision_end_values_ordered_as_timestamps(log):
     # fraction-less empty-window records and µs-precision batch records
     # coexist; the typed (timestamp) order must pick the true max
