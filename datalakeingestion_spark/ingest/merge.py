@@ -116,26 +116,20 @@ def merge_latest(
     The reference recomputes its "latest data zone" view over the WHOLE
     table at read time (and it times out there, README.md:34-35). This
     maintains the materialization at O(|latest| + |batch|) per ingest
-    batch: reduce the batch to per-key winners, union with the current
-    materialization, keep each key's winner, swap. With Delta this becomes
-    ``MERGE INTO ... WHEN MATCHED AND s.{order} > t.{order}``.
+    batch: union the batch with the current materialization, keep each
+    key's winner in one window, swap. The winner rule is associative, so
+    ranking the batch first would only add a shuffle and a sort. With
+    Delta this becomes ``MERGE INTO ... WHEN MATCHED AND s.{order} > t.{order}``.
     """
     from ..operators.relational import latest_rows
 
     _recover_swap(spark, latest_path)
     _, fs, path = _fs(spark, latest_path)
 
-    batch_winners = latest_rows(batch, primary_key, order_col, tie_breaks or [])
+    candidates = batch
     if fs.exists(path):
-        current = spark.read.parquet(latest_path)
-        merged = latest_rows(
-            current.unionByName(batch_winners),
-            primary_key,
-            order_col,
-            tie_breaks or [],
-        )
-    else:
-        merged = batch_winners
+        candidates = spark.read.parquet(latest_path).unionByName(batch)
+    merged = latest_rows(candidates, primary_key, order_col, tie_breaks or [])
 
     staging = latest_path.rstrip("/") + ".__staging__"
     n = _write_counted(

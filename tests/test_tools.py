@@ -77,7 +77,7 @@ PROFILE_FIELDS = (
     "query", "assembly_s", "action_s", "py4j_calls", "eager_jobs",
     "schema_jobs", "jobs", "stages", "tasks", "input_bytes",
     "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes",
-    "status_tracker_jobs", "plan_bytes", "cached_frames_left",
+    "status_tracker_jobs", "plan_bytes", "codegen_compiles", "cached_frames_left",
     # the physical-plan node counts
     "Exchange", "BroadcastExchange", "SortMergeJoin", "ShuffledHashJoin",
     "BroadcastHashJoin", "BroadcastNestedLoopJoin", "CartesianProduct",

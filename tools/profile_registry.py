@@ -24,8 +24,13 @@ Standard output is one JSON document ``{"scale", "cores", "spark",
 goes to standard error. A query that raises gets its exception text in
 ``error`` and the sweep goes on. ``jobs`` counts the query's jobs in the
 event log; ``status_tracker_jobs`` counts them again through
-``statusTracker`` as a cross-check. Work files stay under
-``.perfbench_work/`` and are removed at exit.
+``statusTracker`` as a cross-check. ``codegen_compiles`` counts the Janino
+compiles, the misses of Spark's generated-class cache, from the start of
+``fn()`` to the end of the action; a class an earlier query compiled is a
+hit. ``cached_frames_left`` counts the persistent RDDs present after the
+query that were not present before it, so it does not depend on what
+earlier queries left behind. Work files stay under ``.perfbench_work/``
+and are removed at exit.
 """
 
 from __future__ import annotations
@@ -73,7 +78,7 @@ EVENT_LOG_FIELDS = (
 FIELDS = (
     "query", "assembly_s", "action_s", "py4j_calls", "eager_jobs",
     "schema_jobs", *EVENT_LOG_FIELDS, "status_tracker_jobs", "plan_bytes",
-    "cached_frames_left", *COUNTS, "error",
+    "codegen_compiles", "cached_frames_left", *COUNTS, "error",
 )
 
 
@@ -95,7 +100,10 @@ def _profile(ctx, name: str, fn, sf_dir: str) -> dict:
     row = dict.fromkeys(FIELDS)
     row["query"] = name
     jsc = spark.sparkContext._jsc
-    persisted = jsc.getPersistentRDDs().size()
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    compiles = metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
+    persisted = set(jsc.getPersistentRDDs().keySet())
+    compiled = compiles.getCount()
     ctx.plan_s = ctx.plan_bytes = 0
     tracer.tag(name, "assembly")
     gc.collect()
@@ -116,13 +124,14 @@ def _profile(ctx, name: str, fn, sf_dir: str) -> dict:
         t0 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         row["action_s"] = round(time.perf_counter() - t0, 4)
+        row["codegen_compiles"] = compiles.getCount() - compiled
     except Exception as exc:
         # a Py4JJavaError's first line only names the py4j call
         lines = [ln for ln in str(exc).splitlines() if ln.strip()
                  and not ln.startswith("An error occurred while calling")]
         row["error"] = f"{type(exc).__name__}: {lines[0] if lines else ''}"[:500]
     # frames this query left cached; cleared so the next query starts flat
-    row["cached_frames_left"] = max(0, jsc.getPersistentRDDs().size() - persisted)
+    row["cached_frames_left"] = len(set(jsc.getPersistentRDDs().keySet()) - persisted)
     spark.catalog.clearCache()
     row["status_tracker_jobs"] = sum(
         tracer.jobs_in_group(f"{WORKLOAD}/{name}/{p}") for p in PHASES
