@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import portable_hash32, portable_hash32_sql, portable_hash60
 from ..functions.text import distinct_shingles, tokens, word_shingles
-from ..utils import driver_frame
+from ..utils import bounded_collect, driver_frame
 
 # MinHash parameters — shared with the SQL oracle generator (plans/llm.py).
 MINHASH_PERMS = 16
@@ -946,22 +946,19 @@ def connected_components(
     # the input checkpointed). The checkpoint truncates lineage at the
     # loop entrance, same as the star variant's edge checkpoint.
     both = _checkpoint(both)
-    # size-adaptive local solve (guide §2.2): the checkpointed edge frame
-    # is materialized, so the count is a cheap block scan; a graph that
-    # fits the driver bound is solved with union-find in one collect
-    # instead of O(log d) checkpoint rounds. NULL endpoints (which the
-    # distributed joins silently drop in round 1) keep the loop path so
-    # the two paths never disagree.
-    if both.count() <= MAX_LOCAL_CC_EDGES:
-        rows = [(r["src"], r["dst"]) for r in both.collect()]
-        if all(a is not None and b is not None for a, b in rows):
-            labels = _local_cc_labels(rows, sorted({a for a, _ in rows}))
-            return _local_labels_frame(
-                pairs.sparkSession, both, labels
-            ).select(
-                F.col("node").alias("doc_id"),
-                F.col("label").alias("cluster_id"),
-            )
+    # size-adaptive local solve (guide §2.2): a graph that fits the
+    # driver bound is solved with union-find from one collect of the
+    # checkpointed edges instead of O(log d) checkpoint rounds. NULL
+    # endpoints (which the distributed joins silently drop in round 1)
+    # keep the loop path so the two paths never disagree.
+    t = bounded_collect(both, MAX_LOCAL_CC_EDGES)
+    rows = None if t is None else list(zip(*(c.to_pylist() for c in t.columns)))
+    if rows is not None and all(a is not None and b is not None for a, b in rows):
+        labels = _local_cc_labels(rows, sorted({a for a, _ in rows}))
+        return _local_labels_frame(pairs.sparkSession, both, labels).select(
+            F.col("node").alias("doc_id"),
+            F.col("label").alias("cluster_id"),
+        )
     # self-loops fold the "keep your own label" term into the neighbor-min
     # join itself, so the propagation loop contains NO Union — a Union of
     # a checkpointed child inside the loop trips Catalyst's
@@ -1443,11 +1440,11 @@ def connected_components_star(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    # size-adaptive local solve — same bound and reasoning as
-    # connected_components. The u != v filter above already dropped any
-    # NULL endpoint (NULL != NULL is NULL), so no fallback check needed.
-    if edges.count() <= MAX_LOCAL_CC_EDGES:
-        rows = [(r["u"], r["v"]) for r in edges.collect()]
+    # the u != v filter above already dropped any NULL endpoint
+    # (NULL != NULL is NULL), so the local solve needs no fallback check
+    t = bounded_collect(edges, MAX_LOCAL_CC_EDGES)
+    if t is not None:
+        rows = list(zip(*(c.to_pylist() for c in t.columns)))
         node_ids = {a for a, _ in rows} | {b for _, b in rows}
         labels = _local_cc_labels(rows, sorted(node_ids))
         return _local_labels_frame(pairs.sparkSession, edges, labels).select(

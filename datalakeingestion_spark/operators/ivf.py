@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from ..functions.hashing import portable_hash32
+from ..utils import bounded_collect
 
 
 def _unit(X: np.ndarray) -> np.ndarray:
@@ -131,22 +132,22 @@ def train_centroids(
     # size-adaptive local Lloyd: when the sample fits the driver bound,
     # one collect (raw vec for the assignment kernel, unit vec pre-cast
     # to decimal(28,12) by the SAME Spark cast the distributed aggregate
-    # uses) replaces init + checkpoint + per-iteration jobs. The size
-    # probe is a bare bounded count FIRST — probing with the full
-    # projection would ship ~bound wide rows (and a Decimal per
-    # dimension) to the driver just to learn "too big" on every
-    # production-scale call.
-    probe = embeddings.limit(MAX_LOCAL_TRAIN_VECTORS + 1).count()
-    if probe <= MAX_LOCAL_TRAIN_VECTORS:
-        head = embeddings.select(
+    # uses) replaces init + checkpoint + per-iteration jobs. Past the
+    # bound it has shipped bound + 1 of these rows before falling back,
+    # the same driver budget the local path accepts.
+    head = bounded_collect(
+        embeddings.select(
             portable_hash32(F.col(id_col).cast("string")).alias("__h"),
             F.col(id_col).alias("__id"),
             F.col(vec_col).alias("__vec"),
             F.transform(
                 unit_vec, lambda x: x.cast("decimal(28,12)")
             ).alias("__vdec"),
-        ).collect()
-        return _train_local(head, k, iters)
+        ),
+        MAX_LOCAL_TRAIN_VECTORS,
+    )
+    if head is not None:
+        return _train_local(head.to_pylist(), k, iters)
 
     init = (
         embeddings.select(id_col, vec_col)
@@ -516,7 +517,7 @@ def _epoch_seen(spark, index_path: str, batch_id: str) -> bool:
         if "PATH_NOT_FOUND" in msg or "UNABLE_TO_INFER_SCHEMA" in msg:
             return False
         raise
-    return ledger.filter(F.col("batch_id") == batch_id).limit(1).count() > 0
+    return not ledger.filter(F.col("batch_id") == batch_id).isEmpty()
 
 
 def ivf_topk_stored(

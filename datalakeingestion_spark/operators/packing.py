@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..utils import driver_frame
+from ..utils import bounded_collect, driver_frame
 
 
 def pack_sequences(
@@ -430,7 +430,6 @@ def keyed_prefix_sum(
     weight_col: str,
     out_col: str = "cum",
     num_partitions: int | None = None,
-    max_subtotal_rows: int = MAX_SUBTOTAL_ROWS,
 ) -> DataFrame:
     """Inclusive prefix sum of ``weight_col`` within each ``key_cols``
     group, ordered by ``order_cols`` — the scale-safe replacement for
@@ -457,7 +456,7 @@ def keyed_prefix_sum(
     (key_cols + order_cols) must be a total order (unique rows) for a
     deterministic result; ``weight_col`` must be integral (cast to
     long). The driver-side offset pass holds at most buckets × keys
-    subtotal rows and raises past ``max_subtotal_rows`` (a data-sized
+    subtotal rows and raises past ``MAX_SUBTOTAL_ROWS`` (a data-sized
     key cardinality wants the plain keyed window —
     ``SUM() OVER (PARTITION BY key ORDER BY ...)`` — whose per-key task
     is then small by the same cardinality argument). Returns ``df``'s
@@ -488,24 +487,23 @@ def keyed_prefix_sum(
     part = df.repartitionByRange(n, *rng).withColumn(
         "_pid", F.spark_partition_id()
     ).localCheckpoint(eager=True)
-    # pass 1: per-(bucket, key) subtotals -> exclusive offsets. The
-    # limit bounds driver memory: past max_subtotal_rows the key count
-    # is data-sized and this is the wrong operator — raise, don't OOM.
-    sub = (
-        part.groupBy("_pid", *key_cols)
-        .agg(F.sum(F.col(weight_col).cast("long")).alias("t"))
-        .limit(max_subtotal_rows + 1)
-        .collect()
+    # pass 1: per-(bucket, key) subtotals -> exclusive offsets. Past
+    # MAX_SUBTOTAL_ROWS the key count is data-sized and this is the wrong
+    # operator — raise, don't OOM.
+    sub = bounded_collect(
+        part.groupBy("_pid", *key_cols).agg(
+            F.sum(F.col(weight_col).cast("long")).alias("t")
+        ),
+        MAX_SUBTOTAL_ROWS,
     )
-    if len(sub) > max_subtotal_rows:
+    if sub is None:
         raise ValueError(
-            f"keyed_prefix_sum: >{max_subtotal_rows} bucket×key subtotal "
+            f"keyed_prefix_sum: >{MAX_SUBTOTAL_ROWS} bucket×key subtotal "
             "rows — key cardinality is data-sized; use a plain keyed "
-            "window (SUM() OVER (PARTITION BY key ORDER BY ...)) instead, "
-            "or raise max_subtotal_rows if the driver can hold them"
+            "window (SUM() OVER (PARTITION BY key ORDER BY ...)) instead"
         )
     per_key: dict[tuple, list[tuple[int, int]]] = {}
-    for r in sub:
+    for r in sub.to_pylist():
         k = tuple(r[c] for c in key_cols)
         per_key.setdefault(k, []).append((r["_pid"], int(r["t"] or 0)))
     off_rows = []

@@ -29,9 +29,26 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..utils import driver_frame
+from ..utils import bounded_collect, driver_frame
 
 _DOT_PD = None
+
+
+def _by_length(kernel, *cols: pd.Series) -> pd.Series:
+    """``kernel`` over the float64 matrices stacked from ``cols``' vectors,
+    one call per vector length: a batch that mixes lengths cannot be
+    stacked into one matrix, and rows of one length never meet rows of
+    another (every pairing filters on equal ``size``)."""
+    import numpy as np
+
+    lens = np.fromiter((len(v) for v in cols[0]), dtype=np.int64, count=len(cols[0]))
+    out = np.empty(len(lens))
+    for n in np.unique(lens):
+        at = lens == n
+        out[at] = kernel(
+            *(np.vstack(c.to_numpy()[at]).astype(np.float64) for c in cols)
+        )
+    return pd.Series(out)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -49,9 +66,7 @@ def _dot(a: Column, b: Column) -> Column:
         def kernel(x: pd.Series, y: pd.Series) -> pd.Series:
             import numpy as np
 
-            A = np.vstack(x.to_numpy()).astype(np.float64)
-            B = np.vstack(y.to_numpy()).astype(np.float64)
-            return pd.Series(np.einsum("ij,ij->i", A, B))
+            return _by_length(lambda A, B: np.einsum("ij,ij->i", A, B), x, y)
 
         _DOT_PD = F.pandas_udf(kernel, "double")
     return _DOT_PD(a, b)
@@ -74,8 +89,7 @@ def _norm(a: Column) -> Column:
         def kernel(col: pd.Series) -> pd.Series:
             import numpy as np
 
-            X = np.vstack(col.to_numpy()).astype(np.float64)
-            return pd.Series(np.linalg.norm(X, axis=1))
+            return _by_length(lambda X: np.linalg.norm(X, axis=1), col)
 
         _NORM_PD = F.pandas_udf(kernel, "double")
     return _NORM_PD(a)
@@ -117,34 +131,36 @@ def _round6_spark(arr):
 
 
 #: Upper bound on query rows collected to the driver by the one-pass
-#: kernels below. The query set is metadata-scale by contract (it was a
-#: driver-built broadcast in the former formulation already), but the
-#: contract was only a docstring — past this bound the collect would
-#: bloat the driver and every task closure, so the operator falls back
-#: to the broadcast-join formulation instead (r13, the
-#: packing.MAX_SUBTOTAL_ROWS precedent).
+#: kernels below; past it the operator takes its join formulation. The
+#: query set is metadata-scale by contract, and the bound keeps the
+#: contract from being only a docstring.
 MAX_COLLECT_QUERIES = 100_000
 
 
 def _collect_query_rows(queries: DataFrame, id_col: str, vec_col: str):
-    """Bounded collect of (id, vec) query rows; ``None`` past the bound
-    (caller falls back to the join formulation). Rows with a NULL id or
-    NULL vector are dropped — the NULL-id drop replicates the former
-    join condition, the NULL-vec drop is the explicit contract both
-    formulations now share (a NULL vector can never score).
+    """``(ids, Q)``: the query ids and their vectors stacked into an
+    m × dim float64 matrix, on the driver. ``None`` sends the caller to
+    its join formulation: past ``MAX_COLLECT_QUERIES`` rows, or when the
+    vectors have more than one length (the kernel scores one dimension;
+    the join pairs equal lengths). Rows with a NULL id or vector are
+    dropped, as the join drops them.
 
-    Eager by design: it runs one Spark job while the caller's plan is
-    still being assembled, because the rows are closed over by the
-    scoring kernel (that plan cannot be built before they are on the
-    driver) and their count picks the formulation."""
-    rows = (
-        queries.select(F.col(id_col), F.col(vec_col))
-        .limit(MAX_COLLECT_QUERIES + 1)
-        .collect()
-    )
-    if len(rows) > MAX_COLLECT_QUERIES:
+    Eager: its one Spark job runs while the caller's plan is assembled,
+    because the scoring kernel closes over the rows."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    t = bounded_collect(queries.select(id_col, vec_col), MAX_COLLECT_QUERIES)
+    if t is None:
         return None
-    return [r for r in rows if r[0] is not None and r[1] is not None]
+    t = t.filter(pc.and_(pc.is_valid(t[0]), pc.is_valid(t[1])))
+    ids, vecs = t.columns
+    lens = pc.list_value_length(vecs)
+    width = pc.max(lens).as_py() or 0
+    if len(t) and pc.min(lens).as_py() != width:
+        return None
+    q = pc.list_flatten(vecs).to_numpy(zero_copy_only=False)
+    return np.array(ids.to_pylist()), q.astype(np.float64).reshape(len(t), width)
 
 
 def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -165,8 +181,8 @@ def _cosine_topk_join(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """The former broadcast-join formulation — the fallback when the
-    query set exceeds ``MAX_COLLECT_QUERIES``. Same output contract as
+    """The former broadcast-join formulation — taken when
+    ``_collect_query_rows`` returns ``None``. Same output contract as
     the kernel path: NULL-id/NULL-vec rows dropped on both sides,
     mismatched-dimension pairs dropped, zero-norm cosines NULL (Spark's
     non-ANSI divide), ranked last under desc."""
@@ -223,32 +239,53 @@ def cosine_topk(
 
     Output: (query_id, neighbor_id, cosine) with deterministic ranking
     (cosine rounded to 6 dp, ties broken by neighbor_id). Rows with a
-    NULL id or NULL vector never participate (either side); corpus rows
-    whose dimension differs from the query dimension are skipped; a
+    NULL id or NULL vector never participate (either side); a corpus
+    row is scored only against queries of its own dimension; a
     zero-norm vector on either side yields a NULL cosine that ranks
     LAST (Spark's divide-by-zero-is-NULL, NULLS-LAST-desc behavior —
     r13, ADVICE fix).
 
     Execution shape (one corpus pass): the query set is metadata-scale
-    by contract and bounded by ``MAX_COLLECT_QUERIES`` (past the bound
-    the operator falls back to the broadcast-join formulation), so it
-    is collected once and closed over by a single ``mapInPandas``
-    kernel that scores EVERY query against each Arrow batch with one
-    BLAS matmul and emits only the batch-local top-k per query. Each
-    corpus vector crosses the Python boundary exactly once (the former
-    shape replicated it per query through a BroadcastNestedLoopJoin and
-    paid three ArrowEvalPython nodes); the global window then ranks the
-    ~k·n_batches survivors per query — global top-k under a total
-    order is always a subset of the union of per-batch top-k under the
-    same order (dead lanes rank -inf, so they fill spare slots only),
-    so results are identical row-for-row.
+    by contract (past ``MAX_COLLECT_QUERIES`` rows, or with vectors of
+    more than one length, the operator takes the broadcast-join
+    formulation), so it is collected once and closed over by a single
+    ``mapInPandas`` kernel that scores EVERY query against each Arrow
+    batch with one BLAS matmul and emits only the batch-local top-k per
+    query. Each corpus vector crosses the Python boundary exactly once
+    (the former shape replicated it per query through a
+    BroadcastNestedLoopJoin and paid three ArrowEvalPython nodes); the
+    global window then ranks the ~k·n_batches survivors per query —
+    global top-k under a total order is always a subset of the union of
+    per-batch top-k under the same order (dead lanes rank -inf, so they
+    fill spare slots only), so results are identical row-for-row.
     """
+    collected = _collect_query_rows(queries, id_col, vec_col)
+    if collected is None:
+        return _cosine_topk_join(embeddings, queries, k, id_col, vec_col)
+    q_ids = collected[0]
+    return _topk_one_pass(
+        embeddings, queries, k, id_col, vec_col, collected,
+        lambda C, ids: ids[:, None] != q_ids[None, :],
+    )
+
+
+def _topk_one_pass(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    collected,
+    candidates,
+) -> DataFrame:
+    """The one-pass kernel of ``cosine_topk`` and ``lsh_bucketed_topk``:
+    a ``mapInPandas`` over the corpus scores each Arrow batch against
+    the collected ``(q_ids, Q)`` and emits the batch-local top-k per
+    query among the corpus rows ``candidates(C, ids)`` (an n × m mask)
+    allows; the global window ranks the survivors."""
     import numpy as np
     from pyspark.sql import types as T
 
-    q_rows = _collect_query_rows(queries, id_col, vec_col)
-    if q_rows is None:
-        return _cosine_topk_join(embeddings, queries, k, id_col, vec_col)
     out_schema = T.StructType(
         [
             T.StructField("query_id", queries.schema[id_col].dataType),
@@ -256,13 +293,9 @@ def cosine_topk(
             T.StructField("cosine", T.DoubleType()),
         ]
     )
-    spark = embeddings.sparkSession
-    if not q_rows:
-        return driver_frame(spark, [], out_schema)
-    q_ids = np.array([r[0] for r in q_rows])
-    Q = np.vstack(
-        [np.asarray(r[1], dtype=np.float64) for r in q_rows]
-    )  # m × dim
+    q_ids, Q = collected  # Q: m × dim
+    if not len(q_ids):
+        return driver_frame(embeddings.sparkSession, [], out_schema)
     # same call as the per-batch corpus norms below, so a vector that is
     # both query and corpus row gets the bit-identical norm either side
     q_norms = np.linalg.norm(Q, axis=1)
@@ -292,6 +325,7 @@ def cosine_topk(
             ids = pdf["neighbor_id"].to_numpy()
             C = np.vstack(pdf["c_vec"].to_numpy()).astype(np.float64)
             c_norms = np.linalg.norm(C, axis=1)
+            cand = candidates(C, ids)
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = _round6_spark(
                     (C @ Q.T) / np.outer(c_norms, q_norms)
@@ -299,20 +333,19 @@ def cosine_topk(
             # zero-norm lanes: NULL cosine (NaN → Arrow null), ranked
             # LAST — replicating Spark's NULL divide + NULLS-LAST desc.
             # Rank -2.0: below every real cosine (≥ -1) but ABOVE the
-            # -inf self rows, so a dead lane is never crowded out of
-            # the batch-local top-k by a row the final ranking drops —
-            # the union-superset argument needs the batch order to
-            # match the global order over EMITTABLE rows.
+            # -inf non-candidate rows, so a dead lane is never crowded
+            # out of the batch-local top-k by a row the final ranking
+            # drops — the union-superset argument needs the batch order
+            # to match the global order over EMITTABLE rows.
             dead = (c_norms == 0.0)[:, None] | q_zero[None, :]
             cos[dead] = np.nan
             rank = np.where(dead, -2.0, cos)
-            self_mask = ids[:, None] == q_ids[None, :]
-            rank[self_mask] = -np.inf
+            rank[~cand] = -np.inf
             kk = min(k, len(ids))
             out_q, out_n, out_c = [], [], []
             for j in range(len(q_ids)):
                 top = np.lexsort((ids, -rank[:, j]))[:kk]
-                keep = top[~self_mask[top, j]]
+                keep = top[cand[top, j]]
                 out_q.append(np.repeat(q_ids[j], len(keep)))
                 out_n.append(ids[keep])
                 out_c.append(cos[keep, j])
@@ -354,10 +387,10 @@ def _lsh_bucketed_topk_join(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """The former posexplode+broadcast-join formulation — the fallback
-    when the query set exceeds ``MAX_COLLECT_QUERIES``. Buckets are the
-    same numpy kernel (one matmul per Arrow batch); candidate pairs
-    dedupe through a groupBy before scoring."""
+    """The former posexplode+broadcast-join formulation — taken when
+    the query vectors cannot be stacked into one m × ``dim`` matrix on
+    the driver. Buckets are the same numpy kernel (one matmul per Arrow
+    batch); candidate pairs dedupe through a groupBy before scoring."""
     import numpy as np
 
     mats = np.array(
@@ -368,10 +401,17 @@ def _lsh_bucketed_topk_join(
 
     @F.pandas_udf("array<long>")
     def buckets(col: pd.Series) -> pd.Series:
-        X = np.vstack(col.to_numpy()).astype(np.float64)  # n × dim
-        bits = (X @ mats.T) >= 0.0  # n × (L·k)
-        b = bits.reshape(len(X), n_tables, planes_per_table) @ weights
-        return pd.Series(list(b))
+        # a vector of another length than ``dim`` gets no bucket (NULL:
+        # posexplode emits nothing), as the one-pass kernel skips it
+        at = [i for i, v in enumerate(col) if len(v) == dim]
+        out = [None] * len(col)
+        if at:
+            X = np.vstack(col.to_numpy()[at]).astype(np.float64)  # n × dim
+            bits = (X @ mats.T) >= 0.0  # n × (L·k)
+            b = bits.reshape(len(X), n_tables, planes_per_table) @ weights
+            for i, row in zip(at, b):
+                out[i] = row
+        return pd.Series(out)
 
     c = embeddings.filter(
         F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
@@ -423,8 +463,9 @@ def lsh_bucketed_topk(
     an LSH bucket in ANY of the L hash tables. Same output schema as
     ``cosine_topk``; each candidate pair is scored once regardless of how
     many tables it collides in. NULL-id/NULL-vec rows drop on either
-    side; ragged corpus rows are skipped; zero-norm cosines are NULL and
-    rank LAST (r13, the ``cosine_topk`` contract).
+    side; vectors whose length is not ``dim`` are skipped on either
+    side; zero-norm cosines are NULL and rank LAST (r13, the
+    ``cosine_topk`` contract).
 
     Execution shape (r12, one corpus pass — same rationale as
     ``cosine_topk``): the metadata-scale query set is collected once
@@ -439,10 +480,11 @@ def lsh_bucketed_topk(
     form never makes.
     """
     import numpy as np
-    from pyspark.sql import types as T
 
-    q_rows = _collect_query_rows(queries, id_col, vec_col)
-    if q_rows is None:
+    # the join also takes query vectors whose length is not ``dim``: its
+    # bucket kernel skips them, so they find no candidate
+    collected = _collect_query_rows(queries, id_col, vec_col)
+    if collected is None or collected[1].shape[1] != dim:
         return _lsh_bucketed_topk_join(
             embeddings, queries, k, n_tables, planes_per_table, dim,
             id_col, vec_col,
@@ -458,76 +500,18 @@ def lsh_bucketed_topk(
         bits = (X @ mats.T) >= 0.0  # n × (L·k)
         return bits.reshape(len(X), n_tables, planes_per_table) @ weights
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[id_col].dataType),
-            T.StructField("neighbor_id", embeddings.schema[id_col].dataType),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    spark = embeddings.sparkSession
-    if not q_rows:
-        return driver_frame(spark, [], out_schema)
-    q_ids = np.array([r[0] for r in q_rows])
-    Q = np.vstack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    q_norms = np.linalg.norm(Q, axis=1)
-    q_zero = q_norms == 0.0
+    q_ids, Q = collected
     q_buckets = bucketize(Q)  # m × L
-    qdim = Q.shape[1]
 
-    c = embeddings.filter(
-        F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
-    ).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+    def candidates(C, ids):
+        # shares a bucket in ANY table, and not self
+        return (bucketize(C)[:, None, :] == q_buckets[None, :, :]).any(
+            axis=2
+        ) & (ids[:, None] != q_ids[None, :])
+
+    return _topk_one_pass(
+        embeddings, queries, k, id_col, vec_col, collected, candidates
     )
-
-    def score(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            lens = np.fromiter(
-                (len(v) for v in pdf["c_vec"]), dtype=np.int64,
-                count=len(pdf),
-            )
-            if not (lens == qdim).all():
-                pdf = pdf[lens == qdim]
-                if pdf.empty:
-                    continue
-            ids = pdf["neighbor_id"].to_numpy()
-            C = np.vstack(pdf["c_vec"].to_numpy()).astype(np.float64)
-            c_norms = np.linalg.norm(C, axis=1)
-            c_buckets = bucketize(C)  # n × L
-            # candidate = shares a bucket in ANY table, and not self
-            cand = (c_buckets[:, None, :] == q_buckets[None, :, :]).any(
-                axis=2
-            ) & (ids[:, None] != q_ids[None, :])
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = _round6_spark((C @ Q.T) / np.outer(c_norms, q_norms))
-            # zero-norm lanes: NULL cosine ranked last among candidates
-            # but ABOVE non-candidates (-2.0 < every real cosine; see
-            # cosine_topk for the union-superset argument)
-            dead = (c_norms == 0.0)[:, None] | q_zero[None, :]
-            cos[dead] = np.nan
-            rank = np.where(dead, -2.0, cos)
-            rank[~cand] = -np.inf
-            kk = min(k, len(ids))
-            out_q, out_n, out_c = [], [], []
-            for j in range(len(q_ids)):
-                top = np.lexsort((ids, -rank[:, j]))[:kk]
-                keep = top[cand[top, j]]
-                out_q.append(np.repeat(q_ids[j], len(keep)))
-                out_n.append(ids[keep])
-                out_c.append(cos[keep, j])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cosine": np.concatenate(out_c),
-                }
-            )
-
-    scored = c.mapInPandas(score, out_schema)
-    return _rank_topk(scored, k)
 
 
 def embedding_near_duplicates_blocked(

@@ -157,7 +157,14 @@ def test_connected_components_local_path_matches_distributed(spark, monkeypatch)
     (union-find over the checkpointed edge collect) — its labels must be
     IDENTICAL to the distributed fixpoint's on the same graph, for both
     variants, including ids of non-numeric type and a label set of more
-    than 256 nodes."""
+    than 256 nodes. Timestamp and date ids run with the process in a
+    non-UTC zone: the edge collect returns zone-aware instants, where
+    ``collect()`` returns naive local datetimes, and a label shifted by
+    the zone's offset would show as a mismatch."""
+    import time
+    from datetime import date, datetime
+
+    t = [datetime(2024, 1, d, 10, 0, 0, 123456) for d in range(1, 6)]
     cases = [
         spark.createDataFrame(
             [(1, 2), (2, 3), (5, 4), (6, 7), (7, 8), (6, 8), (9, 9)],
@@ -172,28 +179,43 @@ def test_connected_components_local_path_matches_distributed(spark, monkeypatch)
             [(f"n{i + 1:04d}", f"n{i:04d}") for i in range(300) if i % 5 != 4],
             ["doc_id_a", "doc_id_b"],
         ),
+        spark.createDataFrame(
+            [(t[1], t[2]), (t[0], t[1]), (t[4], t[3])],
+            "doc_id_a timestamp, doc_id_b timestamp",
+        ),
+        spark.createDataFrame(
+            [(date(2024, 3, 2), date(2024, 3, 1)), (date(2024, 7, 4), date(2024, 7, 5))],
+            "doc_id_a date, doc_id_b date",
+        ),
     ]
-    for pairs in cases:
-        local = sorted(
-            (r.doc_id, r.cluster_id)
-            for r in dd.connected_components(pairs).collect()
-        )
-        local_star = sorted(
-            (r.doc_id, r.cluster_id)
-            for r in dd.connected_components_star(pairs).collect()
-        )
-        monkeypatch.setattr(dd, "MAX_LOCAL_CC_EDGES", -1)
-        dist = sorted(
-            (r.doc_id, r.cluster_id)
-            for r in dd.connected_components(pairs).collect()
-        )
-        dist_star = sorted(
-            (r.doc_id, r.cluster_id)
-            for r in dd.connected_components_star(pairs).collect()
-        )
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        assert time.localtime().tm_gmtoff != 0
+        for pairs in cases:
+            local = sorted(
+                (r.doc_id, r.cluster_id)
+                for r in dd.connected_components(pairs).collect()
+            )
+            local_star = sorted(
+                (r.doc_id, r.cluster_id)
+                for r in dd.connected_components_star(pairs).collect()
+            )
+            with monkeypatch.context() as m:
+                m.setattr(dd, "MAX_LOCAL_CC_EDGES", -1)
+                dist = sorted(
+                    (r.doc_id, r.cluster_id)
+                    for r in dd.connected_components(pairs).collect()
+                )
+                dist_star = sorted(
+                    (r.doc_id, r.cluster_id)
+                    for r in dd.connected_components_star(pairs).collect()
+                )
+            assert local and local == dist
+            assert local_star == dist_star
+    finally:
         monkeypatch.undo()
-        assert local and local == dist
-        assert local_star == dist_star
+        time.tzset()
 
 
 def test_star_contraction_matches_propagation(spark, docs):

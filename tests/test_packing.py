@@ -196,18 +196,18 @@ def test_keyed_prefix_sum_survives_clear_cache(spark):
     assert got == want
 
 
-def test_keyed_prefix_sum_data_sized_keys_raise(spark):
+def test_keyed_prefix_sum_data_sized_keys_raise(spark, monkeypatch):
     """A data-sized key cardinality must fail loudly (driver OOM guard),
     with a message naming the keyed-window alternative."""
+    from datalakeingestion_spark.operators import packing
     from datalakeingestion_spark.operators.packing import keyed_prefix_sum
 
+    monkeypatch.setattr(packing, "MAX_SUBTOTAL_ROWS", 100)
     df = spark.range(200).selectExpr(
         "id as k", "id as ord", "CAST(1 AS LONG) as w"
     )
     with pytest.raises(ValueError, match="keyed window"):
-        keyed_prefix_sum(
-            df, ["k"], ["ord"], "w", num_partitions=4, max_subtotal_rows=100
-        )
+        keyed_prefix_sum(df, ["k"], ["ord"], "w", num_partitions=4)
 
 
 # ---------------------------------------------------------------------------

@@ -43,6 +43,41 @@ def test_query_matches_oracle(spark, duck, registry_frames, name):
     assert_matches_oracle(df, duck, qd.oracle, name)
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "ann_cosine_topk",
+        "ann_ivf_topk",
+        "ann_lsh_bucketed",
+        "dedup_cluster_assign",
+        "dedup_cluster_assign_star",
+    ],
+)
+def test_distributed_path_matches_oracle(spark, duck, monkeypatch, name):
+    """A query over a dual-path operator, built fresh with every
+    local-versus-distributed bound at -1: its distributed path alone
+    must match the oracle. A spy on ``bounded_collect`` checks that each
+    decision really went distributed."""
+    from datalakeingestion_spark import utils
+    from datalakeingestion_spark.operators import dedup, ivf, similarity
+
+    monkeypatch.setattr(similarity, "MAX_COLLECT_QUERIES", -1)
+    monkeypatch.setattr(ivf, "MAX_LOCAL_TRAIN_VECTORS", -1)
+    monkeypatch.setattr(dedup, "MAX_LOCAL_CC_EDGES", -1)
+    decisions = []
+
+    def spy(df, max_rows):
+        table = utils.bounded_collect(df, max_rows)
+        decisions.append(table)
+        return table
+
+    for module in (similarity, ivf, dedup):
+        monkeypatch.setattr(module, "bounded_collect", spy)
+    df = REGISTRY[name].fn(spark, SF_DIR)
+    assert decisions and all(t is None for t in decisions)
+    assert_matches_oracle(df, duck, REGISTRY[name].oracle, name)
+
+
 @pytest.mark.parametrize("name", ROWS_ONLY_QUERIES)
 def test_rows_only_query_runs(spark, registry_frames, name):
     qd = REGISTRY[name]

@@ -490,9 +490,14 @@ def test_cosine_topk_bounded_collect_falls_back(spark, emb, monkeypatch):
     assert got_lsh == want_lsh
 
 
-def test_cosine_topk_null_and_ragged_vectors_skipped(spark):
+def test_cosine_topk_null_and_ragged_vectors_skipped(spark, monkeypatch):
     """ADVICE r12: NULL or wrong-length corpus vectors must not crash
-    the vstack — they are filtered/skipped on both formulations."""
+    the vstack — they are filtered/skipped on both formulations. With a
+    corpus of two vector lengths in one partition (the ragged rows share
+    an Arrow batch), ``cosine_topk`` scores each query against the
+    corpus rows of its own length, and ``lsh_bucketed_topk`` skips every
+    vector whose length is not ``dim``; each gives the same rows with
+    the query collect allowed and with it forced to the join."""
     rows = [
         (1, [1.0, 0.0, 0.0]),
         (2, [0.5, 0.5, 0.0]),
@@ -507,3 +512,30 @@ def test_cosine_topk_null_and_ragged_vectors_skipped(spark):
     assert sorted(r.neighbor_id for r in got) == [2]
     twin = sim._cosine_topk_join(df, q, 10, "vec_id", "embedding").collect()
     assert sorted(r.neighbor_id for r in twin) == [2]
+
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0]),
+            (2, [0.5, 0.5, 0.0]),
+            (3, [1.0, 0.0]),
+            (4, [0.0, 1.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+
+    def scored(out):
+        return sorted((r.query_id, r.neighbor_id, r.cosine) for r in out.collect())
+
+    cos_q = df.filter(F.col("vec_id").isin(1, 3))
+    lsh_q = df.filter(F.col("vec_id").isin(1, 2))
+    lsh_kwargs = dict(k=10, n_tables=8, planes_per_table=2, dim=3)
+    for bound in (sim.MAX_COLLECT_QUERIES, -1):
+        monkeypatch.setattr(sim, "MAX_COLLECT_QUERIES", bound)
+        assert scored(sim.cosine_topk(df, cos_q, k=10)) == [
+            (1, 2, 0.707107),
+            (3, 4, 0.0),
+        ], bound
+        assert scored(sim.lsh_bucketed_topk(df, lsh_q, **lsh_kwargs)) == [
+            (1, 2, 0.707107),
+            (2, 1, 0.707107),
+        ], bound

@@ -189,6 +189,26 @@ def test_package_never_lists_with_listfiles():
     assert calls == []
 
 
+_LIMIT_PLUS_ONE = re.compile(r"limit\([^)]*\+ *1\)")
+_COUNT_COMPARED = re.compile(r"\.count\(\)\s*[<>]|[<>]=?\s*[^<>=,;\"']*\.count\(\)")
+
+
+@pytest.mark.smoke
+def test_size_decisions_go_through_bounded_collect():
+    """``utils.bounded_collect`` is the package's one local-versus-
+    distributed decision: outside ``utils.py`` no site probes a frame's
+    size with a ``limit(n + 1)`` or compares a ``count()`` with a bound,
+    so a second probe cannot grow back."""
+    utils = os.path.join("datalakeingestion_spark", "utils.py")
+    probes = [
+        f"{path}:{i}"
+        for path, i, line in _package_lines()
+        if path != utils
+        and (_LIMIT_PLUS_ONE.search(line) or _COUNT_COMPARED.search(line))
+    ]
+    assert probes == []
+
+
 @pytest.mark.smoke
 def test_driver_rows_become_spark_data_one_way():
     """``utils.driver_frame`` is the package's only row-list-to-DataFrame
