@@ -133,8 +133,8 @@ def train_centroids(
     # one collect (raw vec for the assignment kernel, unit vec pre-cast
     # to decimal(28,12) by the SAME Spark cast the distributed aggregate
     # uses) replaces init + checkpoint + per-iteration jobs. Past the
-    # bound it has shipped bound + 1 of these rows before falling back,
-    # the same driver budget the local path accepts.
+    # bound no column of this projection has been computed or shipped:
+    # the decision selects a literal in its place.
     head = bounded_collect(
         embeddings.select(
             portable_hash32(F.col(id_col).cast("string")).alias("__h"),

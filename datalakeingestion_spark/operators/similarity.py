@@ -145,7 +145,7 @@ def _collect_query_rows(queries: DataFrame, id_col: str, vec_col: str):
     the join pairs equal lengths). Rows with a NULL id or vector are
     dropped, as the join drops them.
 
-    Eager: its one Spark job runs while the caller's plan is assembled,
+    Eager: its Spark jobs run while the caller's plan is assembled,
     because the scoring kernel closes over the rows."""
     import numpy as np
     import pyarrow.compute as pc
@@ -484,7 +484,7 @@ def lsh_bucketed_topk(
     # the join also takes query vectors whose length is not ``dim``: its
     # bucket kernel skips them, so they find no candidate
     collected = _collect_query_rows(queries, id_col, vec_col)
-    if collected is None or collected[1].shape[1] != dim:
+    if collected is None or (len(collected[0]) and collected[1].shape[1] != dim):
         return _lsh_bucketed_topk_join(
             embeddings, queries, k, n_tables, planes_per_table, dim,
             id_col, vec_col,
@@ -501,7 +501,8 @@ def lsh_bucketed_topk(
         return bits.reshape(len(X), n_tables, planes_per_table) @ weights
 
     q_ids, Q = collected
-    q_buckets = bucketize(Q)  # m × L
+    # an empty query set comes back 0 wide; it scores nothing either way
+    q_buckets = bucketize(Q.reshape(len(q_ids), dim))  # m × L
 
     def candidates(C, ids):
         # shares a bucket in ANY table, and not self

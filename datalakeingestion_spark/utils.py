@@ -194,24 +194,25 @@ def bounded_collect(df, max_rows: int):
     when ``df`` has more than ``max_rows`` rows: the read twin of
     :func:`driver_frame`, and the package's one local-versus-distributed
     decision (a caller solves the table on the driver and takes its
-    distributed path on ``None``). It is one Spark job that ships at
-    most ``max_rows + 1`` rows, where a ``limit(...).collect()`` runs a
-    job per round of partitions it scans and a ``count()`` probe adds
-    jobs before the collect: on a checkpointed 1,000-row edge frame
-    (``local[4]``, warm medians of 7) ``count()`` then ``collect()`` took
-    3 jobs and 177 ms, this 1 job and 56 ms; at 200 partitions 3 jobs
-    and 452 ms against 1 job and 234 ms. A ``max_rows`` of -1 always
-    gives ``None``.
-    Timestamps come back as zone-aware instants, not the naive local
-    datetimes ``collect()`` gives."""
-    import pyarrow as pa
+    distributed path on ``None``). A ``max_rows`` of -1 always gives
+    ``None``.
 
-    # toArrow() minus its two conf reads, schema fetch and cast to the
-    # same types: six py4j calls fewer per decision
-    table = pa.Table.from_batches(
-        df.limit(max_rows + 1)._collect_as_arrow(empty_list_if_zero_records=False)
-    )
-    return None if table.num_rows > max_rows else table
+    The decision collects one literal column of ``df.limit(max_rows + 1)``;
+    only a frame that fits is then collected in full. Spark computes that
+    limit by shuffling up to ``max_rows + 1`` rows from every partition
+    to one task, so the decision carries no column of ``df``: over the
+    bound, 200 partitions of an IVF training projection (32 dims, bound
+    1,000; ``local[4]``, warm medians of 5) shuffled 67 MB in 5.9 s when
+    collected outright, against 0.03 MB in 0.3 s for this decision (a
+    ``limit(...).count()`` is as cheap but runs one job more). Under the
+    bound the decision adds one job before the collect, two when ``df``
+    ends in a shuffle. Timestamps come back as zone-aware UTC instants,
+    not the naive local datetimes ``collect()`` gives."""
+    from pyspark.sql import functions as F
+
+    if df.select(F.lit(True)).limit(max_rows + 1).toArrow().num_rows > max_rows:
+        return None
+    return df.toArrow()
 
 
 def with_retries(

@@ -717,6 +717,31 @@ def test_driver_frame_plans_as_local_relation(spark):
     assert _plans_as_local_relation(from_ddl)
 
 
+def test_bounded_collect_decides_without_computing_columns(spark):
+    """utils.bounded_collect decides over the bound without computing or
+    shipping any column of the frame: Spark computes a collected
+    ``limit(n + 1)`` by shuffling up to n + 1 rows from EVERY partition,
+    so a decision that carried the columns would move partitions x (n + 1)
+    full rows before learning the frame is too big. A column whose every
+    evaluation raises must not fail the decision; under the bound the
+    frame comes back whole."""
+    from pyspark.sql.functions import udf
+
+    from datalakeingestion_spark.utils import bounded_collect
+
+    @udf("long")
+    def boom(x):
+        raise RuntimeError("column computed")
+
+    df = spark.range(40, numPartitions=4).select("id", boom("id").alias("b"))
+    assert bounded_collect(df, 10) is None
+    assert bounded_collect(df, -1) is None
+    assert bounded_collect(df.select("id"), 39) is None
+    t = bounded_collect(df.select("id"), 40)
+    assert sorted(t.column("id").to_pylist()) == list(range(40))
+    assert bounded_collect(df.filter("id < 0"), 0).num_rows == 0
+
+
 def test_driver_frame_schema_nullability_and_value_validation(spark):
     """driver_frame must (a) produce a schema EQUAL to createDataFrame's
     including nullability, and (b) raise a bad value at construction, as

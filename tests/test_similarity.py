@@ -529,7 +529,8 @@ def test_cosine_topk_null_and_ragged_vectors_skipped(spark, monkeypatch):
     cos_q = df.filter(F.col("vec_id").isin(1, 3))
     lsh_q = df.filter(F.col("vec_id").isin(1, 2))
     lsh_kwargs = dict(k=10, n_tables=8, planes_per_table=2, dim=3)
-    for bound in (sim.MAX_COLLECT_QUERIES, -1):
+    default = sim.MAX_COLLECT_QUERIES
+    for bound in (default, -1):
         monkeypatch.setattr(sim, "MAX_COLLECT_QUERIES", bound)
         assert scored(sim.cosine_topk(df, cos_q, k=10)) == [
             (1, 2, 0.707107),
@@ -539,3 +540,17 @@ def test_cosine_topk_null_and_ragged_vectors_skipped(spark, monkeypatch):
             (1, 2, 0.707107),
             (2, 1, 0.707107),
         ], bound
+
+    # an empty query set, and one whose only vector is NULL, give no rows
+    # on either path; at the default bound neither operator plans its join
+    none_q = df.filter(F.col("vec_id") == 99)
+    null_q = spark.createDataFrame([(1, None)], "vec_id long, embedding array<double>")
+    for bound in (default, -1):
+        with monkeypatch.context() as m:
+            m.setattr(sim, "MAX_COLLECT_QUERIES", bound)
+            if bound >= 0:
+                for name in ("_cosine_topk_join", "_lsh_bucketed_topk_join"):
+                    m.setattr(sim, name, lambda *a, **kw: pytest.fail("joined"))
+            for qs in (none_q, null_q):
+                assert scored(sim.cosine_topk(df, qs, k=10)) == [], bound
+                assert scored(sim.lsh_bucketed_topk(df, qs, **lsh_kwargs)) == [], bound
